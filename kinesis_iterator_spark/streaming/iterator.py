@@ -28,9 +28,10 @@ Delivery semantics preserved exactly (SURVEY.md §2.A summary):
   without its ignored-error nil-deref.
 
 Execution is Spark-shaped and SHARD-COUNT-INDEPENDENT: one trigger issues
-exactly TWO Spark actions regardless of how many shards are open — one
-bounded fetch covering every open shard (per-shard stats ride back on the
-same aggregate) and one delivery pass over
+the same Spark jobs regardless of how many shards are open — one bounded
+fetch covering every open shard (per-shard stats ride back on the same
+aggregate; three jobs, plus one schema read on a topology's first fetch)
+and one delivery pass over
 ``repartition(shardId).sortWithinPartitions(shardId, sequenceNumber)``.
 The per-shard goroutine fan-out (A12, kinesis.go:131-139) is Spark's
 task-per-partition; at hundreds of shards a slow shard delays only its
@@ -215,8 +216,9 @@ class Iterator:
     def poll_once(self) -> int:
         """One trigger: ONE bounded fetch across every open shard, ONE
         delivery action, then per-shard checkpoints. Returns records
-        delivered. Spark actions per trigger: 2 (fetch stats + delivery),
-        independent of shard count.
+        delivered. The fetch costs three Spark jobs (one more on a
+        topology's first fetch) and the delivery adds the handler's own;
+        neither depends on shard count.
 
         Fetch errors take the A11 path: log, re-acquire cursors from the
         in-memory sequences, return 0 — the next trigger retries."""

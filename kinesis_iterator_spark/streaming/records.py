@@ -25,18 +25,21 @@ RECORD_SCHEMA = (
 SEQ_PAD = 12
 
 
+def shard_no_col(user_id: F.Column, n_shards: int) -> F.Column:
+    """The shard number: position of the row's shard in ``list_shards``."""
+    return user_id % n_shards
+
+
 def shard_id_col(user_id: F.Column, n_shards: int) -> F.Column:
     return F.concat(
         F.lit("shardId-"),
-        F.lpad((user_id % n_shards).cast("string"), 12, "0"),
+        F.lpad(shard_no_col(user_id, n_shards).cast("string"), 12, "0"),
     )
 
 
-def to_records(
-    events: DataFrame, stream_name: str = "events", n_shards: int = 8
-) -> DataFrame:
-    """events fixture → stream-record DataFrame (the simulated wire format)."""
-    return events.select(
+def record_columns(stream_name: str, n_shards: int) -> list[F.Column]:
+    """The record schema's columns as expressions over the events fixture."""
+    return [
         F.encode("props", "UTF-8").alias("data"),
         F.col("user_id").cast("string").alias("partitionKey"),
         F.lpad(F.col("event_id").cast("string"), SEQ_PAD, "0").alias(
@@ -45,4 +48,11 @@ def to_records(
         F.col("ts").alias("approximateArrivalTimestamp"),
         F.lit(stream_name).alias("streamName"),
         shard_id_col(F.col("user_id"), n_shards).alias("shardId"),
-    )
+    ]
+
+
+def to_records(
+    events: DataFrame, stream_name: str = "events", n_shards: int = 8
+) -> DataFrame:
+    """events fixture → stream-record DataFrame (the simulated wire format)."""
+    return events.select(*record_columns(stream_name, n_shards))

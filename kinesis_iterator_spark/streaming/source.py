@@ -1,16 +1,20 @@
 """Simulated sharded stream source over the ``events`` fixture.
 
 Plays the role of the Kinesis service in the reference's loop:
-- ``list_shards``    → A1 (kinesis.go:121-128) shard discovery; re-listing
+- ``list_shards``      → A1 (kinesis.go:121-128) shard discovery; re-listing
   after a reshard returns the new topology (A13, kinesis.go:58-98).
-- ``get_records``    → A3 (kinesis.go:180-183) bounded fetch from a cursor,
-  in per-shard sequence order; returns the next cursor (A4) and
-  ``closed`` when the shard is exhausted post-reshard (A9).
+- ``get_records_all``  → A3 (kinesis.go:180-183) bounded fetch from every
+  open shard's cursor, in per-shard sequence order; the per-shard tails
+  are the next cursors (A4), and cursors of a pre-reshard topology come
+  back ``closed`` (A9).
 
-The fetch is a declarative DataFrame slice — filter on (shard, sequence >
-cursor) + per-shard rank ≤ limit — so Catalyst pushes the shard/sequence
-predicates into the parquet scan. One Spark job per micro-batch, exactly
-like a Structured Streaming trigger.
+The fetch is a declarative DataFrame slice — filter on (sequence > the
+shard's cursor) + per-shard rank ≤ limit — whose cursor set is a literal
+array in the plan, indexed by each row's shard number. A fetch costs
+THREE Spark jobs whatever the shard count (the window's shuffle, the
+stats aggregate's shuffle and its result), plus one parquet
+schema-inference job the first time a topology is read
+(tests/test_stream_iterator.py pins both counts).
 """
 
 from __future__ import annotations
@@ -21,16 +25,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from .records import to_records
+from .records import RECORD_SCHEMA, record_columns, shard_no_col
 
 GET_RECORDS_LIMIT = 1000  # kinesis.go:182
 
+_SHARD_NO = "_shard_no"  # the fetch's cursor index; never leaves the source
 
-@dataclass
-class FetchResult:
-    records: DataFrame  # record-schema rows, ≤ limit, per-shard seq order
-    last_sequence: str | None  # highest sequence in this batch
-    closed: bool  # NextShardIterator == nil analogue (A9)
+# A fetched batch leads with the shard id, then the other record columns:
+# the column order handlers and sink files have always received.
+_BATCH_COLUMNS = ["shardId"] + [
+    f.split()[0] for f in RECORD_SCHEMA.split(", ") if f.split()[0] != "shardId"
+]
 
 
 @dataclass
@@ -43,6 +48,15 @@ class MultiFetchResult:
     closed: list[str]  # shards whose cursors predate the topology (A9)
 
 
+def _sql_string(s: str | None) -> str:
+    """A SQL string literal for ``s`` that needs no escaping: its UTF-8
+    bytes as a hex binary literal, cast back to string (folded to a plain
+    literal by the optimizer)."""
+    if s is None:
+        return "CAST(NULL AS STRING)"
+    return f"CAST(X'{s.encode().hex()}' AS STRING)"
+
+
 class SimulatedShardedSource:
     """A 'stream' = the events table sharded by ``user_id % n_shards``.
 
@@ -50,6 +64,12 @@ class SimulatedShardedSource:
     the old topology immediately read as closed, and ``list_shards``
     returns the children — mirroring a Kinesis split/merge where parent
     shards drain and children appear.
+
+    The stream file is read once per topology: a topology's first fetch
+    resolves its schema and file listing, and later fetches reuse them
+    until a ``reshard`` changes the shard count. The file must therefore
+    not be rewritten while a source is open; point a new source at a
+    changed stream.
     """
 
     def __init__(
@@ -66,6 +86,8 @@ class SimulatedShardedSource:
         self.n_shards = n_shards
         self.status = status
         self._generation = 0
+        # (n_shards, record frame), resolved on a topology's first fetch
+        self._rec: tuple[int, DataFrame] | None = None
 
     # -- control-plane ------------------------------------------------------
 
@@ -92,45 +114,31 @@ class SimulatedShardedSource:
 
     # -- data-plane ---------------------------------------------------------
 
-    def _records(self) -> DataFrame:
-        from ..tables import load_table  # handles the NANOS-timestamp fixup
+    def _records(self, n_shards: int) -> DataFrame:
+        """The record frame plus each row's shard number (``_SHARD_NO``),
+        built once per topology: ``events`` has no pinned schema, so every
+        fresh read of it runs a schema-inference job. Keyed on the shard
+        count rather than cleared by ``reshard``, so a fetch racing a
+        reshard (``Iterator.run`` polls from its own thread) cannot leave
+        the old topology's frame behind."""
+        if self._rec is None or self._rec[0] != n_shards:
+            from ..tables import load_table  # handles the NANOS fixup
 
-        ev = load_table(self.spark, self.sf_dir, "events")
-        return to_records(ev, self.stream_name, self.n_shards)
-
-    def get_records(
-        self, cursor: dict, limit: int = GET_RECORDS_LIMIT
-    ) -> FetchResult:
-        """A3/A4/A9: ≤ limit records after the cursor, per-shard order.
-
-        Returns ``closed=True`` (nil NextShardIterator) when the cursor's
-        generation predates a reshard, or the shard is fully drained."""
-        if cursor["generation"] != self._generation:
-            empty = self.spark.createDataFrame([], self._records().schema)
-            return FetchResult(records=empty, last_sequence=None, closed=True)
-
-        rec = self._records().filter(F.col("shardId") == cursor["shard_id"])
-        if cursor["after"] is not None:
-            rec = rec.filter(F.col("sequenceNumber") > cursor["after"])
-        w = W.partitionBy("shardId").orderBy("sequenceNumber")
-        batch = (
-            rec.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= limit)
-            .drop("_rn")
-        )
-        tail = batch.agg(F.max("sequenceNumber").alias("m")).collect()[0]["m"]
-        if tail is None:
-            # Drained. A live Kinesis shard stays open (more data may come);
-            # the simulated fixture is finite, so a drained shard reads as
-            # closed only after a reshard — otherwise it's just an empty poll.
-            return FetchResult(records=batch, last_sequence=None, closed=False)
-        return FetchResult(records=batch, last_sequence=tail, closed=False)
+            ev = load_table(self.spark, self.sf_dir, "events")
+            rec = ev.select(
+                *record_columns(self.stream_name, n_shards),
+                shard_no_col(F.col("user_id"), n_shards).alias(_SHARD_NO),
+            )
+            self._rec = (n_shards, rec)
+        return self._rec[1]
 
     def get_records_all(
         self, cursors: dict[str, dict], limit: int = GET_RECORDS_LIMIT
     ) -> MultiFetchResult:
         """One bounded fetch covering EVERY open shard (the scale form of
-        A3): the cursor set joins in as a broadcast dim, the per-shard
+        A3): the cursor set enters the plan as one literal array of
+        per-shard ``after`` sequences indexed by the row's shard number —
+        an O(1) lookup per row at any shard count — the per-shard
         row_number caps each shard at ``limit``, and the per-shard tail
         sequence + row count come back from a single aggregate — one Spark
         action total, versus one-fetch-plus-two-actions per shard in the
@@ -145,29 +153,35 @@ class SimulatedShardedSource:
             for sid, c in cursors.items()
             if c["generation"] != self._generation
         ]
-        live = {sid: c for sid, c in cursors.items() if sid not in set(closed)}
+        closed_set = set(closed)
+        live = {sid: c for sid, c in cursors.items() if sid not in closed_set}
         if not live:
-            empty = self.spark.createDataFrame([], self._records().schema)
+            empty = self.spark.createDataFrame([], RECORD_SCHEMA).select(
+                *_BATCH_COLUMNS
+            )
             return MultiFetchResult(empty, {}, {}, closed)
 
         # sequenceNumber is zero-padded, so "" orders before every real
         # sequence — a None cursor ("start of shard") becomes the empty
-        # string and the predicate stays a single comparison.
-        cur_df = self.spark.createDataFrame(
-            [(sid, c["after"] or "") for sid, c in live.items()],
-            "shardId string, after string",
+        # string and the predicate stays a single comparison. A shard
+        # without a live cursor gets NULL, so its rows compare NULL and
+        # drop out. One SQL string keeps the literal one py4j call.
+        shards = self.list_shards()
+        afters = ", ".join(
+            _sql_string((live[sid]["after"] or "") if sid in live else None)
+            for sid in shards
         )
+        after = F.get(F.expr(f"array({afters})"), F.col(_SHARD_NO))
         rec = (
-            self._records()
-            .join(F.broadcast(cur_df), "shardId")
-            .filter(F.col("sequenceNumber") > F.col("after"))
-            .drop("after")
+            self._records(len(shards))
+            .filter(F.col("sequenceNumber") > after)
+            .select(*_BATCH_COLUMNS)
         )
         w = W.partitionBy("shardId").orderBy("sequenceNumber")
         # Persist the batch for the trigger's lifetime: it is consumed
         # TWICE (the stats aggregate below, then the caller's delivery
         # action), and without the mark each consumer re-runs the whole
-        # scan→join→window lineage. The stats collect populates the
+        # scan→filter→window lineage. The stats collect populates the
         # cache; Iterator.poll_once unpersists as soon as the trigger's
         # DELIVERY work finishes (before the checkpoint loop, which only
         # touches driver-side tails — nothing may consume the cached

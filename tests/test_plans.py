@@ -281,3 +281,27 @@ def test_window_suite_is_one_window_pass(spark, sf_dir):
     # their own shuffles.
     plan = plan_of(spark, sf_dir, "window_functions_suite")
     assert plan.count("Exchange") == 1
+
+
+def test_stream_fetch_cursors_are_a_plan_literal(spark, sf_dir):
+    # The Iterator's multi-shard fetch: the cursor set is a literal array
+    # in the scan's filter, not a relation broadcast per trigger; the
+    # only shuffle is the per-shard row_number window's, and its limit
+    # runs as a WindowGroupLimit right above the parquet scan.
+    from kinesis_iterator_spark.streaming import SimulatedShardedSource
+
+    src = SimulatedShardedSource(spark, sf_dir, n_shards=4)
+    cursors = {sid: src.shard_cursor(sid) for sid in src.list_shards()}
+    fetch = src.get_records_all(cursors, 50)
+    try:
+        plan = fetch.records._jdf.queryExecution().executedPlan().toString()
+    finally:
+        fetch.records.unpersist(blocking=False)
+    # the cached batch's plan as it ran (AQE prints the initial one too)
+    final = plan.split("== Initial Plan ==")[0].splitlines()
+    assert not any("Broadcast" in line for line in final)
+    assert not any("Join" in line for line in final)
+    assert sum(line.lstrip(" +-").startswith("Exchange ") for line in final) == 1
+    wgl = [i for i, line in enumerate(final) if "WindowGroupLimit" in line]
+    scan = [i for i, line in enumerate(final) if "FileScan parquet" in line]
+    assert wgl and len(scan) == 1 and max(wgl) < scan[0]

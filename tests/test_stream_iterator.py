@@ -3,7 +3,11 @@ cited behavior of the reference (file:line in the docstrings)."""
 
 from __future__ import annotations
 
+import os
+
+import pyarrow.parquet as pq
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from kinesis_iterator_spark.streaming import (
     InMemorySaver,
@@ -372,3 +376,140 @@ def test_graceful_shutdown(spark, sf_dir):
     it.run()
     it.shutdown(timeout=120.0)
     assert it._thread is None
+
+
+# -- the multi-shard fetch: job count and cursor filter ------------------------
+
+
+def _next_job_id(spark) -> int:
+    """The scheduler's next job id; its delta across a call counts the
+    Spark jobs the call submitted."""
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def test_fetch_jobs_do_not_grow_with_shard_count(spark, sf_dir):
+    """O(1) Spark jobs per trigger: a multi-shard fetch and a handler-less
+    trigger submit the same jobs at 4 and at 8 shards — at most three once
+    the source has resolved its read (the window's shuffle, the stats
+    aggregate's shuffle, its result), plus the schema read of the first
+    fetch. The cursor set is a plan literal, so no broadcast job."""
+    per_topology = []
+    for n in (4, 8):
+        src = make_source(spark, sf_dir, n_shards=n)
+        cursors = {sid: src.shard_cursor(sid) for sid in src.list_shards()}
+        start = _next_job_id(spark)
+        fetch = src.get_records_all(cursors, 20)
+        first = _next_job_id(spark) - start
+        fetch.records.unpersist(blocking=False)
+        assert sum(fetch.counts.values()) == 20 * n
+        it = Iterator(src).set_saver(InMemorySaver()).set_fetch_limit(20)
+        it._start_shards()
+        start = _next_job_id(spark)
+        assert it.poll_once() == 20 * n
+        per_topology.append((first, _next_job_id(spark) - start))
+    assert per_topology[0] == per_topology[1], per_topology
+    first, later = per_topology[0]
+    assert later <= 3 and first <= later + 1, per_topology
+
+
+@pytest.fixture(scope="module")
+def reference(sf_dir) -> dict[int, dict[str, list[tuple]]]:
+    """The stream per shard at 4 and at 8 shards, computed from
+    events.parquet with pyarrow: n_shards → shard id →
+    (sequenceNumber, partitionKey, data) rows in sequence order."""
+    t = pq.read_table(
+        os.path.join(sf_dir, "events.parquet"),
+        columns=["event_id", "user_id", "props"],
+    )
+    cols = [t[c].to_pylist() for c in t.column_names]
+    by_n = {}
+    for n in (4, 8):
+        shards: dict[str, list[tuple]] = {}
+        for e, u, p in zip(*cols):
+            shards.setdefault(f"shardId-{u % n:012d}", []).append(
+                (f"{e:012d}", str(u), p.encode())
+            )
+        by_n[n] = {sid: sorted(rows) for sid, rows in shards.items()}
+    return by_n
+
+
+def _check_fetch(src, cursors, limit, reference, closed=()):
+    """Fetch ``cursors`` and compare rows, tails and counts with the
+    pyarrow reference for the source's topology; the ``closed`` cursors
+    must fetch nothing."""
+    ref = reference[src.n_shards]
+    want = {}
+    for sid, c in cursors.items():
+        if sid in closed:
+            continue
+        rows = [r for r in ref.get(sid, []) if r[0] > (c["after"] or "")]
+        if rows[:limit]:
+            want[sid] = rows[:limit]
+    fetch = src.get_records_all(cursors, limit)
+    try:
+        got: dict[str, list[tuple]] = {}
+        for r in fetch.records.collect():
+            got.setdefault(r["shardId"], []).append(
+                (r["sequenceNumber"], r["partitionKey"], bytes(r["data"]))
+            )
+    finally:
+        fetch.records.unpersist(blocking=False)
+    assert fetch.records.columns == [
+        "shardId", "data", "partitionKey", "sequenceNumber",
+        "approximateArrivalTimestamp", "streamName",
+    ]
+    assert {sid: sorted(rows) for sid, rows in got.items()} == want
+    assert fetch.tails == {sid: rows[-1][0] for sid, rows in want.items()}
+    assert fetch.counts == {sid: len(rows) for sid, rows in want.items()}
+    return fetch
+
+
+@pytest.fixture(scope="module")
+def fetch_sources(spark, sf_dir):
+    """One source per topology, shared by the property examples so each
+    resolves its read once."""
+    return {n: make_source(spark, sf_dir, n_shards=n) for n in (4, 8)}
+
+
+@settings(max_examples=8, deadline=None)
+@given(data=st.data())
+def test_fetch_matches_pyarrow_reference(fetch_sources, reference, data):
+    """Random cursor maps — start-of-shard (None) cursors, cursors mid-shard
+    or at/past the tail, only a subset of shards live — and limits from 1
+    to the largest shard: the fetch returns exactly each live shard's next
+    ``limit`` rows, with matching tails and counts."""
+    n = data.draw(st.sampled_from(sorted(fetch_sources)), label="n_shards")
+    src = fetch_sources[n]
+    ref = reference[n]
+    cursors = {}
+    for sid in src.list_shards():
+        seqs = [r[0] for r in ref[sid]]
+        kind = data.draw(st.sampled_from(["absent", "start", "mid", "past"]))
+        if kind == "absent":
+            continue
+        after = None  # "start"
+        if kind == "mid":
+            after = data.draw(st.sampled_from(seqs))
+        elif kind == "past":
+            after = "9" * 12
+        cursors[sid] = src.advance(src.shard_cursor(sid), after)
+    limit = data.draw(
+        st.integers(1, max(len(rows) for rows in ref.values())), label="limit"
+    )
+    fetch = _check_fetch(src, cursors, limit, reference)
+    assert fetch.closed == []
+
+
+def test_fetch_after_reshard_closes_old_cursors(spark, sf_dir, reference):
+    """After ``reshard`` the old topology's cursors come back in ``closed``
+    and fetch nothing, while the children's cursors read the new
+    topology's rows — the read resolved before the reshard is dropped."""
+    src = make_source(spark, sf_dir, n_shards=4)
+    old = {sid: src.shard_cursor(sid) for sid in src.list_shards()}
+    _check_fetch(src, old, 30, reference)
+    src.reshard(8)
+    # shards 4..7 exist only in the new topology; 0..3 keep old cursors
+    children = {sid: src.shard_cursor(sid) for sid in src.list_shards()[4:]}
+    fetch = _check_fetch(src, {**old, **children}, 30, reference, closed=old)
+    assert sorted(fetch.closed) == sorted(old)
+    assert set(fetch.tails) == set(children)
