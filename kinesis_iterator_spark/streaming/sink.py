@@ -39,7 +39,16 @@ class ParquetEpochSink:
         self.batches_written: list[str] = []
 
     def __call__(self, batch: DataFrame, epoch: int) -> None:
-        key = batch.agg(F.min("sequenceNumber").alias("k")).collect()[0]["k"]
+        # The min as a top-1 sort (one TakeOrdered job) rather than
+        # agg(min) (a partial-aggregate stage plus the result: two jobs).
+        # Nulls last, so a NULL sorts where min() skips it.
+        top = (
+            batch.select("sequenceNumber")
+            .orderBy(F.col("sequenceNumber").asc_nulls_last())
+            .limit(1)
+            .collect()
+        )
+        key = top[0][0] if top else None
         if key is None:
             return
         batch.write.mode("overwrite").parquet(f"{self.root}/batch={key}")

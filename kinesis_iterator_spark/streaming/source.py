@@ -11,8 +11,10 @@ Plays the role of the Kinesis service in the reference's loop:
 The fetch is a declarative DataFrame slice — filter on (sequence > the
 shard's cursor) + per-shard rank ≤ limit — whose cursor set is a literal
 array in the plan, indexed by each row's shard number. A fetch costs
-THREE Spark jobs whatever the shard count (the window's shuffle, the
-stats aggregate's shuffle and its result), plus one parquet
+THREE Spark jobs whatever the shard count (the window's shuffle, AQE's
+TableCacheQueryStage materialising the persisted batch, and the stats
+result; the stats aggregate needs no shuffle of its own, since the
+batch is already partitioned by shard), plus one parquet
 schema-inference job the first time a topology is read
 (tests/test_stream_iterator.py pins both counts).
 """

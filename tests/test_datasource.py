@@ -4,7 +4,8 @@ parity with the library source, and bounded (paged) admission.
 
 This is the Structured-Streaming-native form of the reference's consumer
 loop — the offset WAL plays Sequence/SequenceSaver (sequence.go:26-36),
-micro-batch partitions play the per-shard goroutines (kinesis.go:131-139).
+micro-batch read tasks, each holding whole shards, play the per-shard
+goroutines on the host's cores (kinesis.go:131-139).
 """
 
 from __future__ import annotations
@@ -688,10 +689,10 @@ def test_reshard_offset_layer_machinery_driver_side():
 
 def _proto_batch(reader, start, end):
     """One micro-batch: plan partitions, read them executor-style via
-    _read_slice, commit. Returns the delivered sequence numbers."""
+    reader.read, commit. Returns the delivered sequence numbers."""
     seqs: list[str] = []
     for p in reader.partitions(start, end):
-        for b in ds._read_slice(p):
+        for b in reader.read(p):
             seqs.extend(b.column("sequenceNumber").to_pylist())
     reader.commit(end)
     return seqs
@@ -828,3 +829,113 @@ def test_successive_splits_exactly_once_protocol(sf_dir, tmp_path):
     assert len(seen) == len(set(seen)), "successive splits duplicated"
     assert len(seen) == total
     assert r._prev_layers == []
+
+
+# -- read tasks: whole shards, at most one task per slot -----------------
+
+
+def _per_shard_seqs(reader, parts) -> dict:
+    """Sequences each shard delivered, in read order, through
+    reader.read — the executor side of a micro-batch."""
+    out: dict = {}
+    for p in parts:
+        for b in reader.read(p):
+            shards = b.column("shardId").to_pylist()
+            for shard, seq in zip(shards, b.column("sequenceNumber").to_pylist()):
+                out.setdefault(shard, []).append(seq)
+    return out
+
+
+@pytest.mark.parametrize("slots", [2, 3, 8, 64])
+def test_micro_batch_packs_whole_shards_into_task_slots(sf_dir, slots):
+    """Protocol-level, no Spark: a paged 8-shard drain planned for
+    ``slots`` task slots reads each shard in exactly one partition,
+    uses min(advancing shards, slots) partitions, and delivers the same
+    per-shard sequences, in order, as one partition per shard."""
+    opts = {"path": sf_dir, "n_shards": "8", "limit": "40", "available_now": "true"}
+    packed = ds.SimKinesisStreamReader(opts, slots=slots)
+    per_shard = ds.SimKinesisStreamReader(opts)
+    start = packed.initialOffset()
+    got: dict = {}
+    want: dict = {}
+    for _ in range(200):
+        end = packed.latestOffset()
+        assert per_shard.latestOffset() == end
+        if end == start:
+            break
+        parts = packed.partitions(start, end)
+        ref = per_shard.partitions(start, end)
+        assert all(len(p.slices) == 1 for p in ref)
+        advancing = [p.slices[0].shard_index for p in ref]
+        assert len(parts) == min(len(advancing), slots)
+        assert sorted(s.shard_index for p in parts for s in p.slices) == advancing
+        for key, seqs in _per_shard_seqs(packed, parts).items():
+            got.setdefault(key, []).extend(seqs)
+        for key, seqs in _per_shard_seqs(per_shard, ref).items():
+            want.setdefault(key, []).extend(seqs)
+        packed.commit(end)
+        per_shard.commit(end)
+        start = end
+    else:
+        raise AssertionError("protocol drain did not converge in 200 batches")
+    assert got == want
+    assert all(seqs == sorted(seqs) for seqs in got.values())
+    assert sum(len(seqs) for seqs in got.values()) == _events_total(sf_dir)
+
+
+def test_drain_with_more_shards_than_task_slots(spark, sf_dir):
+    """16 shards on the suite session's 8 task slots: the micro-batch
+    runs in at most 8 read tasks, each shard inside one task and in
+    sequence order, and delivers every record exactly once."""
+    n_shards = 16
+    slots = spark.sparkContext.defaultParallelism
+    assert slots < n_shards
+    ds.register(spark)
+    sdf = (
+        spark.readStream.format(ds.FORMAT_NAME)
+        .option("path", sf_dir)
+        .option("n_shards", n_shards)
+        .load()
+        .select(F.spark_partition_id().alias("pid"), "shardId", "sequenceNumber")
+    )
+    batches: list = []
+    _drain(sdf, tempfile.mkdtemp(), batches)
+    rows = [r for b in batches for r in b]
+    want = to_records(load_table(spark, sf_dir, "events"), n_shards=n_shards)
+    key = lambda r: (r["shardId"], r["sequenceNumber"])  # noqa: E731
+    assert sorted(key(r) for r in rows) == sorted(key(r) for r in want.collect())
+    assert len({r["pid"] for r in rows}) <= slots
+    by_shard: dict = {}
+    for r in rows:
+        by_shard.setdefault(r["shardId"], []).append((r["pid"], r["sequenceNumber"]))
+    assert len(by_shard) > slots  # some task read several shards
+    for got in by_shard.values():
+        assert len({pid for pid, _ in got}) == 1  # one task per shard
+        seqs = [seq for _, seq in got]
+        assert seqs == sorted(seqs)
+
+
+def test_session_timezone_reaches_the_reader(spark, sf_dir):
+    """register() captures a non-UTC session timezone and the reader
+    process applies it: the batch read's arrival timestamps equal the
+    library record model's under America/New_York."""
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        ds.register(spark)
+        got = (
+            spark.read.format(ds.FORMAT_NAME)
+            .option("path", sf_dir)
+            .option("n_shards", N_SHARDS)
+            .load()
+            .collect()
+        )
+        want = to_records(
+            load_table(spark, sf_dir, "events"), n_shards=N_SHARDS
+        ).collect()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        ds.register(spark)
+    key = lambda r: (r["shardId"], r["sequenceNumber"])  # noqa: E731
+    arrival = {key(r): r["approximateArrivalTimestamp"] for r in want}
+    assert len(got) == len(arrival)
+    assert all(r["approximateArrivalTimestamp"] == arrival[key(r)] for r in got)

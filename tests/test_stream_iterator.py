@@ -390,8 +390,9 @@ def _next_job_id(spark) -> int:
 def test_fetch_jobs_do_not_grow_with_shard_count(spark, sf_dir):
     """O(1) Spark jobs per trigger: a multi-shard fetch and a handler-less
     trigger submit the same jobs at 4 and at 8 shards — at most three once
-    the source has resolved its read (the window's shuffle, the stats
-    aggregate's shuffle, its result), plus the schema read of the first
+    the source has resolved its read (the window's shuffle, materialising
+    the persisted batch, the stats result; the stats aggregate sits on the
+    cached batch without a shuffle), plus the schema read of the first
     fetch. The cursor set is a plan literal, so no broadcast job."""
     per_topology = []
     for n in (4, 8):
@@ -410,6 +411,30 @@ def test_fetch_jobs_do_not_grow_with_shard_count(spark, sf_dir):
     assert per_topology[0] == per_topology[1], per_topology
     first, later = per_topology[0]
     assert later <= 3 and first <= later + 1, per_topology
+
+
+def test_parquet_sink_key_costs_one_job(spark, sf_dir, tmp_path):
+    """ParquetEpochSink finds its batch key, the minimum sequence, in
+    ONE Spark job (a top-1 sort); agg(min) took two (the partial
+    aggregate's shuffle and the result). Over an exchange-free frame a
+    sink call is that job plus the write's; an empty batch writes
+    nothing."""
+    from kinesis_iterator_spark.streaming import ParquetEpochSink
+    from kinesis_iterator_spark.streaming.records import to_records
+    from kinesis_iterator_spark.tables import load_table
+
+    records = to_records(load_table(spark, sf_dir, "events"), n_shards=4)
+    shard = records.filter("shardId = 'shardId-000000000002'")
+    sink = ParquetEpochSink(str(tmp_path / "out"))
+    jobs = []
+    for batch in (shard, shard.filter("false")):
+        start = _next_job_id(spark)
+        sink(batch, 0)
+        jobs.append(_next_job_id(spark) - start)
+    assert jobs == [2, 0], jobs
+    want = min(r[0] for r in shard.select("sequenceNumber").collect())
+    assert sink.batches_written == [want]
+    assert sink.read(spark).count() == shard.count()
 
 
 @pytest.fixture(scope="module")
