@@ -31,12 +31,24 @@ Execution is Spark-shaped and SHARD-COUNT-INDEPENDENT: one trigger issues
 the same Spark jobs regardless of how many shards are open — one bounded
 fetch covering every open shard (per-shard stats ride back on the same
 aggregate; three jobs, plus one schema read on a topology's first fetch)
-and one delivery pass over
-``repartition(shardId).sortWithinPartitions(shardId, sequenceNumber)``.
-The per-shard goroutine fan-out (A12, kinesis.go:131-139) is Spark's
-task-per-partition; at hundreds of shards a slow shard delays only its
-task, not a driver loop (the round-1 design polled shards serially with
-2 driver actions each).
+and one delivery pass over the fetched batch, which arrives clustered by
+shard (``MultiFetchResult.records``) and is only sorted within its
+partitions. The per-shard goroutine fan-out (A12, kinesis.go:131-139) is
+Spark's task-per-partition; at hundreds of shards a slow shard delays
+only its task, not a driver loop (the round-1 design polled shards
+serially with 2 driver actions each).
+
+One page of prefetch hides the fetch behind delivery, as KCL's
+prefetching record publisher does: when a fetch shows a backlog (no
+shard closed, some open shard filled its page), the next page — the
+same cursors advanced to this page's tails — is fetched on the
+Iterator's background thread while this page is delivered and
+checkpointed. At most one page is in flight. The next poll takes it only
+if its cursors, fetch limit and the source's topology are still the ones
+it was fetched for, so it is exactly the page a fresh fetch would
+return; otherwise the page is unpersisted and the poll fetches fresh.
+Delivery order, at-least-once checkpoints and the A11 refresh (a failed
+prefetch surfaces on the poll that takes it) are unchanged.
 """
 
 from __future__ import annotations
@@ -45,12 +57,14 @@ import logging
 import threading
 import time
 from collections.abc import Callable
+from concurrent.futures import Future, ThreadPoolExecutor
 from typing import Any, Protocol
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 
 from .sequence import Sequence, SequenceSaver, TRIM_HORIZON
-from .source import GET_RECORDS_LIMIT, SimulatedShardedSource
+from .source import GET_RECORDS_LIMIT, MultiFetchResult, SimulatedShardedSource
 
 DEFAULT_SLEEP_LIMIT = 10.0  # seconds — kinesis.go:257
 MONITOR_PERIOD = 20.0  # seconds — kinesis.go:59
@@ -88,6 +102,13 @@ def _handler_partition(handler: Handler):
     return apply
 
 
+def _unpersist_page(page: Future) -> None:
+    """Done-callback of a prefetched page no poll will take: free its
+    cached batch (a fetch that raised released its own)."""
+    if page.exception() is None:
+        page.result().records.unpersist(blocking=False)
+
+
 class Iterator:
     """Checkpointed, reshard-aware consumer over a simulated sharded stream."""
 
@@ -114,6 +135,12 @@ class Iterator:
         self._sequences: dict[str, Sequence] = {}
         self.dlq: list[tuple[str, str]] = []
         self.records_delivered = 0
+        # The page in flight: the (cursors, limit, topology) it was
+        # fetched for, and its future. Fetched on one background thread.
+        self._prefetch: tuple[tuple, Future] | None = None
+        self._prefetcher = ThreadPoolExecutor(
+            max_workers=1, thread_name_prefix="kinesis-prefetch"
+        )
 
     # -- configuration (fluent, as in the reference) ------------------------
 
@@ -211,6 +238,45 @@ class Iterator:
         if seq is not None:
             seq.stop()
 
+    # -- prefetch ------------------------------------------------------------
+
+    def _topology(self) -> tuple:
+        """The source's shard ids and their generation (a fresh cursor's);
+        a reshard changes it."""
+        shards = tuple(self.source.list_shards())
+        fresh = self.source.shard_cursor(shards[0]) if shards else {}
+        return shards, fresh.get("generation")
+
+    def _launch_prefetch(self, cursors: dict[str, dict]) -> None:
+        """Fetch the page at ``cursors`` on the background thread, with
+        this thread's Spark job group and local properties."""
+        fetch = inheritable_thread_target(self.source.spark)(
+            self.source.get_records_all
+        )
+        key = (cursors, self._fetch_limit, self._topology())
+        self._prefetch = (
+            key, self._prefetcher.submit(fetch, cursors, self._fetch_limit)
+        )
+
+    def _take_prefetch(self) -> MultiFetchResult | None:
+        """The page in flight if it was fetched for this poll's cursors,
+        fetch limit and topology — waiting for it, and raising what its
+        fetch raised. Otherwise release it and return None."""
+        if self._prefetch is None:
+            return None
+        key, page = self._prefetch
+        if key != (self._shards, self._fetch_limit, self._topology()):
+            self._release_prefetch()
+            return None
+        self._prefetch = None
+        return page.result()
+
+    def _release_prefetch(self) -> None:
+        """Drop the page in flight; it is unpersisted once its fetch ends."""
+        if self._prefetch is not None:
+            self._prefetch[1].add_done_callback(_unpersist_page)
+            self._prefetch = None
+
     # -- consumption ---------------------------------------------------------
 
     def poll_once(self) -> int:
@@ -220,12 +286,22 @@ class Iterator:
         topology's first fetch) and the delivery adds the handler's own;
         neither depends on shard count.
 
+        The fetch is the page prefetched by the previous poll when that
+        page was fetched for this poll's cursors, fetch limit and
+        topology; a page fetched for anything else (cursors a failed
+        delivery left unadvanced, a changed limit, a reshard) is released
+        and the poll fetches fresh. When this page shows a backlog, the
+        next one is fetched while it is delivered (module docstring); a
+        delivery or checkpoint that raises releases it.
+
         Fetch errors take the A11 path: log, re-acquire cursors from the
         in-memory sequences, return 0 — the next trigger retries."""
         self._last_poll_error = False
         self._last_poll_at_tail = False
         try:
-            fetch = self.source.get_records_all(self._shards, self._fetch_limit)
+            fetch = self._take_prefetch()
+            if fetch is None:
+                fetch = self.source.get_records_all(self._shards, self._fetch_limit)
         except Exception as e:  # noqa: BLE001 — source/transport errors
             self._logger.error("fetch error (will refresh cursors): %s", e)
             self._refresh_cursors()
@@ -233,6 +309,19 @@ class Iterator:
             self._last_poll_error = True
             return 0
 
+        try:
+            delivered = self._deliver(fetch)
+        except BaseException:
+            self._release_prefetch()
+            raise
+        self._epoch += 1
+        self.records_delivered += delivered
+        return delivered
+
+    def _deliver(self, fetch: MultiFetchResult) -> int:
+        """Close the fetch's closed shards, prefetch the next page on a
+        backlog, deliver the batch and checkpoint each shard's tail.
+        Returns records delivered."""
         # Everything from here until delivery completes sits under ONE
         # try/finally owning the persisted trigger batch: if closed-shard
         # handling (seq.stop can raise on a failing saver) or delivery
@@ -252,14 +341,18 @@ class Iterator:
                 for sid in self._shards
             )
             if not fetch.tails:
-                self._epoch += 1
                 return 0  # empty poll
-
-            batch = (
-                fetch.records.repartition(
-                    max(len(fetch.tails), 1), "shardId"
-                ).sortWithinPartitions("shardId", "sequenceNumber")
-            )
+            next_cursors = {
+                sid: self.source.advance(c, fetch.tails[sid])
+                if sid in fetch.tails else c
+                for sid, c in self._shards.items()
+            }
+            # Some open shard filled its page and none closed: a known
+            # backlog, so fetch the next page while this one is delivered.
+            # A drain that ends at the tail never launches a wasted fetch.
+            if not fetch.closed and not self._last_poll_at_tail:
+                self._launch_prefetch(next_cursors)
+            batch = fetch.records.sortWithinPartitions("shardId", "sequenceNumber")
             if self._batch_handler is not None:
                 self._batch_handler(batch, self._epoch)
             if self._handler is not None:
@@ -282,44 +375,42 @@ class Iterator:
 
         # Checkpoint AFTER the whole trigger's handler work — at-least-once
         # (kinesis.go:198-202). Raises loudly on persistent failure.
-        delivered = 0
         for shard_id, tail in fetch.tails.items():
             self._sequences[shard_id].store(tail)
-            self._shards[shard_id] = self.source.advance(
-                self._shards[shard_id], tail
-            )
-            delivered += fetch.counts[shard_id]
-        self._epoch += 1
-        self.records_delivered += delivered
-        return delivered
+            self._shards[shard_id] = next_cursors[shard_id]
+        return sum(fetch.counts.values())
 
     def run_until_drained(self, max_polls: int = 1000) -> int:
         """Synchronous consumption to exhaustion (test/bench entry): poll
-        until every shard returns empty twice. Returns records delivered."""
+        until every shard returns empty twice. Returns records delivered.
+        A page still in flight when it returns is released."""
         self._start_shards()
         total = 0
         idle = 0
-        for _ in range(max_polls):
-            if self._stop.is_set():
-                break
-            n = self.poll_once()
-            total += n
-            # An A11 error poll is a retry, not evidence of a drained
-            # stream — only genuinely-empty fetches count toward idleness.
-            idle = idle + 1 if (n == 0 and not self._last_poll_error) else 0
-            if not self._shards:
-                self.reconcile()
-                if not self._shards:
+        try:
+            for _ in range(max_polls):
+                if self._stop.is_set():
                     break
-                continue  # fresh post-reshard shards: poll before judging
-            # Under-limit fetch on EVERY open shard ⇒ the poll itself
-            # observed all cursors at their tails — the stream is drained
-            # NOW, no confirming empty polls needed. (The live run() loop
-            # deliberately ignores this hint: a live shard can refill.)
-            if self._last_poll_at_tail:
-                break
-            if idle >= 2:
-                break
+                n = self.poll_once()
+                total += n
+                # An A11 error poll is a retry, not evidence of a drained
+                # stream — only genuinely-empty fetches count toward idleness.
+                idle = idle + 1 if (n == 0 and not self._last_poll_error) else 0
+                if not self._shards:
+                    self.reconcile()
+                    if not self._shards:
+                        break
+                    continue  # fresh post-reshard shards: poll before judging
+                # Under-limit fetch on EVERY open shard ⇒ the poll itself
+                # observed all cursors at their tails — the stream is drained
+                # NOW, no confirming empty polls needed. (The live run() loop
+                # deliberately ignores this hint: a live shard can refill.)
+                if self._last_poll_at_tail:
+                    break
+                if idle >= 2:
+                    break
+        finally:
+            self._release_prefetch()
         return total
 
     def run(self) -> "Iterator":
@@ -351,14 +442,16 @@ class Iterator:
 
     def shutdown(self, timeout: float = 30.0) -> None:
         """Graceful stop with timeout (A15, kinesis.go:221-236): signal,
-        drain, raise on timeout (the reference returns an error). If the
-        loop died earlier, its exception is re-raised here."""
+        drain, raise on timeout (the reference returns an error). A page
+        still in flight is released. If the loop died earlier, its
+        exception is re-raised here."""
         self._stop.set()
         if self._thread is not None:
             self._thread.join(timeout)
             if self._thread.is_alive():
                 raise TimeoutError(f"shutdown timed out after {timeout}s")
             self._thread = None
+        self._release_prefetch()
         if self._error is not None:
             err, self._error = self._error, None
             raise RuntimeError("consumption loop failed") from err

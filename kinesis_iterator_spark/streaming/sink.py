@@ -55,8 +55,8 @@ class ParquetEpochSink:
         self.batches_written.append(key)
 
     def read(self, spark: SparkSession) -> DataFrame:
-        """All written records across batches (basePath keeps the batch
-        partition column out of the schema)."""
-        return spark.read.option("basePath", self.root).parquet(
-            f"{self.root}/batch=*"
-        ).drop("batch")
+        """All written records across batches: the root read as a table
+        partitioned by ``batch``, with the partition column dropped. The
+        root, not a ``batch=*`` glob: on a glob, Spark's file-stream-sink
+        metadata probe logs a stack trace on every read."""
+        return spark.read.parquet(self.root).drop("batch")

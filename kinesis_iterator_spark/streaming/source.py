@@ -42,7 +42,14 @@ _BATCH_COLUMNS = ["shardId"] + [
 
 @dataclass
 class MultiFetchResult:
-    """One trigger's fetch across every open shard (A3×A12 in one plan)."""
+    """One trigger's fetch across every open shard (A3×A12 in one plan).
+
+    ``records`` is persisted and clustered by shard: the fetch window's
+    exchange hash-partitions it by ``shardId`` and sorts each partition
+    by (``shardId``, ``sequenceNumber``), so every shard's rows sit in
+    one partition in sequence order. Consumers deliver it as is; a
+    ``sortWithinPartitions`` restates the order without an exchange.
+    """
 
     records: DataFrame  # all shards' batches, record schema
     tails: dict[str, str]  # shard_id → highest sequence fetched (∅ if empty)

@@ -305,3 +305,40 @@ def test_stream_fetch_cursors_are_a_plan_literal(spark, sf_dir):
     wgl = [i for i, line in enumerate(final) if "WindowGroupLimit" in line]
     scan = [i for i, line in enumerate(final) if "FileScan parquet" in line]
     assert wgl and len(scan) == 1 and max(wgl) < scan[0]
+
+
+def test_iterator_delivers_the_fetch_layout_without_an_exchange(spark, sf_dir):
+    # The Iterator delivers the fetched batch as the fetch window left it:
+    # hash-partitioned by shard, each partition sorted by (shardId,
+    # sequenceNumber). No Exchange sits above the cached scan, and every
+    # shard's rows are in one partition, in ascending sequence order. Four
+    # shards on eight shuffle partitions: a repartition by shard count
+    # would not match the fetch's partitioning.
+    from kinesis_iterator_spark.streaming import (
+        InMemorySaver,
+        Iterator,
+        SimulatedShardedSource,
+    )
+
+    seen = {}
+
+    def deliver(df, epoch):
+        seen["plan"] = df._jdf.queryExecution().executedPlan().toString()
+        seen["rows"] = df.rdd.mapPartitionsWithIndex(
+            lambda i, rows: ((i, r["shardId"], r["sequenceNumber"]) for r in rows)
+        ).collect()
+
+    src = SimulatedShardedSource(spark, sf_dir, n_shards=4)
+    it = Iterator(src).set_saver(InMemorySaver()).set_fetch_limit(60)
+    it.foreach_batch(deliver)._start_shards()
+    assert it.poll_once() == 4 * 60
+    lines = seen["plan"].splitlines()
+    scan = next(i for i, line in enumerate(lines) if "InMemoryTableScan" in line)
+    assert not any("Exchange" in line for line in lines[:scan])
+    parts: dict[str, set[int]] = {}
+    seqs: dict[str, list[str]] = {}
+    for i, shard, seq in seen["rows"]:
+        parts.setdefault(shard, set()).add(i)
+        seqs.setdefault(shard, []).append(seq)
+    assert len(parts) == 4 and all(len(p) == 1 for p in parts.values())
+    assert all(s == sorted(s) and len(s) == 60 for s in seqs.values())

@@ -4,6 +4,7 @@ cited behavior of the reference (file:line in the docstrings)."""
 from __future__ import annotations
 
 import os
+import time
 
 import pyarrow.parquet as pq
 import pytest
@@ -38,6 +39,18 @@ def collect_batches(it: Iterator):
 
     it.foreach_batch(fn)
     return seen
+
+
+def _settle(it: Iterator) -> None:
+    """Wait until the page the Iterator prefetches, if any, has finished
+    (and a released one is unpersisted): it is fetched on the Iterator's
+    one background thread, so a no-op queued behind it returns after it."""
+    it._prefetcher.submit(lambda: None).result(timeout=120)
+
+
+def _persisted(spark) -> int:
+    """The number of RDDs the SparkContext holds persisted."""
+    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
 
 def test_consume_all_exactly_once_happy_path(spark, sf_dir):
@@ -173,16 +186,26 @@ def test_fetch_error_refreshes_cursor_and_continues(spark, sf_dir):
 def test_fetch_error_resumes_after_checkpoint_not_from_scratch(spark, sf_dir):
     """The A11 refresh must resume AFTER the last checkpoint (the
     reference reuses InitQuery with the in-memory sequence): records
-    checkpointed before the error are not redelivered."""
+    checkpointed before the error are not redelivered. The failing fetch
+    is a prefetched page: its error surfaces on the poll that takes it,
+    which logs it, refreshes the cursors and delivers nothing."""
     src = FlakySource(spark, sf_dir, n_shards=4, fail_n=0)
-    it = Iterator(src).set_saver(InMemorySaver()).set_fetch_limit(100)
+    lg = ListLogger()
+    it = (
+        Iterator(src).set_saver(InMemorySaver()).set_fetch_limit(100)
+        .set_logger(lg)
+    )
     seen = collect_batches(it)
     it._start_shards()
-    it.poll_once()  # 400 records checkpointed
-    src.fail_n = src.fetches + 1  # next fetch fails once
-    it.poll_once()  # error → refresh, no delivery
+    it.poll_once()  # 400 records checkpointed, the next page prefetched
+    _settle(it)
+    src.fail_n = src.fetches + 1  # the page prefetched next fails once
+    assert it.poll_once() == 400  # takes the prefetched page
+    assert it.poll_once() == 0  # takes the failed one: error → refresh
+    assert it._last_poll_error
+    assert any("fetch error" in m for m in lg.errors)
     before = len(seen)
-    assert before == 400
+    assert before == 800
     it.run_until_drained()
     assert len(seen) == N_EVENTS
     assert len(set(seen)) == N_EVENTS, "refresh must not replay checkpointed data"
@@ -271,18 +294,23 @@ def test_init_query_trim_horizon_vs_after_sequence():
 def test_reshard_closes_old_shards_and_picks_up_children(spark, sf_dir):
     """Reshard: old shards read closed → checkpoint deleted + reader exits
     (kinesis.go:204-210, sequence.go:51-53); the monitor pass re-lists and
-    picks up the children (kinesis.go:84-88)."""
+    picks up the children (kinesis.go:84-88). The page prefetched before
+    the reshard is discarded, not delivered."""
     saver = InMemorySaver()
     src = make_source(spark, sf_dir, n_shards=4)
     it = Iterator(src).set_saver(saver).set_fetch_limit(50)
     seen = collect_batches(it)
+    base = _persisted(spark)
     it._start_shards()
     it.poll_once()
     assert len(saver._data) == 4
+    _settle(it)  # the next page is fetched, not yet taken
 
     src.reshard(8)
-    it.poll_once()  # every old cursor reads closed → A9 cleanup
+    assert it.poll_once() == 0  # every old cursor reads closed → A9 cleanup
     assert not it._shards
+    _settle(it)
+    assert _persisted(spark) == base, "the discarded page stayed cached"
     assert saver._data == {}, "closed-shard checkpoints must be deleted"
 
     it.reconcile()  # monitor pass (A13) discovers the 8 children
@@ -336,6 +364,10 @@ def test_parquet_sink_exactly_once_across_crash(spark, sf_dir, tmp_path):
     it2.run_until_drained()
 
     out = sink.read(spark)
+    assert out.columns == [
+        "shardId", "data", "partitionKey", "sequenceNumber",
+        "approximateArrivalTimestamp", "streamName",
+    ]
     assert out.count() == N_EVENTS, "exactly-once violated (dupes or loss)"
     assert out.select("sequenceNumber").distinct().count() == N_EVENTS
     # the crash trigger's batch key was written twice — same directory
@@ -378,6 +410,109 @@ def test_graceful_shutdown(spark, sf_dir):
     assert it._thread is None
 
 
+# -- one page of prefetch -------------------------------------------------------
+
+
+def test_failed_delivery_releases_prefetched_page_and_refetches(spark, sf_dir):
+    """A batch handler raises while the next page is prefetched: the page
+    is released, and the next poll fetches again from the cursors the
+    failed trigger left unadvanced — the same page, no record skipped."""
+    base = _persisted(spark)
+    it = Iterator(make_source(spark, sf_dir)).set_saver(InMemorySaver())
+    it.set_fetch_limit(100)
+    pages: list[list[tuple[str, str]]] = []
+
+    def fn(df, epoch):
+        pages.append(sorted(
+            (r["shardId"], r["sequenceNumber"])
+            for r in df.select("shardId", "sequenceNumber").collect()
+        ))
+        if len(pages) == 2:
+            raise RuntimeError("handler failed")
+
+    it.foreach_batch(fn)
+    it._start_shards()
+    it.poll_once()
+    with pytest.raises(RuntimeError, match="handler failed"):
+        it.poll_once()
+    assert it._prefetch is None
+    _settle(it)
+    assert _persisted(spark) == base, "the released page stayed cached"
+    assert it.poll_once() == 400
+    assert pages[2] == pages[1]
+    it.run_until_drained()
+    assert len({r for page in pages for r in page}) == N_EVENTS
+
+
+def test_changed_fetch_limit_discards_prefetched_page(spark, sf_dir):
+    """A page prefetched at one fetch limit is not delivered after
+    ``set_fetch_limit`` changes it: the poll fetches fresh at the new
+    limit."""
+    base = _persisted(spark)
+    it = Iterator(make_source(spark, sf_dir)).set_saver(InMemorySaver())
+    it.set_fetch_limit(100)
+    seen = collect_batches(it)
+    it._start_shards()
+    assert it.poll_once() == 400
+    it.set_fetch_limit(50)
+    assert it.poll_once() == 200
+    assert len(seen) == len(set(seen)) == 600
+    it.run_until_drained()
+    assert len(seen) == len(set(seen)) == N_EVENTS
+    assert _persisted(spark) == base
+
+
+def test_drain_and_shutdown_release_the_prefetched_page(spark, sf_dir):
+    """No page outlives its consumer: the persisted RDD count is back to
+    its earlier value after a drain that stopped with a page in flight
+    (``max_polls``), after a complete drain, and after ``shutdown`` of a
+    live loop that sleeps with a page prefetched."""
+    base = _persisted(spark)
+    src = make_source(spark, sf_dir)
+    it = Iterator(src).set_saver(InMemorySaver()).set_fetch_limit(100)
+    collect_batches(it)
+    assert it.run_until_drained(max_polls=1) == 400
+    _settle(it)
+    assert _persisted(spark) == base
+    assert it.run_until_drained() == N_EVENTS - 400
+    assert _persisted(spark) == base
+
+    live = Iterator(src).set_fetch_limit(100).set_sleep_limit(300)
+    live.set_saver(InMemorySaver())
+    collect_batches(live)
+    live.run()
+    deadline = time.monotonic() + 120
+    while live.records_delivered == 0 and time.monotonic() < deadline:
+        time.sleep(0.05)
+    assert live.records_delivered == 400  # sleeping, next page prefetched
+    live.shutdown(timeout=120.0)
+    assert live._prefetch is None
+    _settle(live)
+    assert _persisted(spark) == base
+
+
+def test_drain_submits_the_same_jobs_as_without_prefetch(spark, sf_dir, tmp_path):
+    """Prefetch moves fetches to another thread, it adds none: an 8-shard
+    drain into ``ParquetEpochSink`` submits one schema read, three jobs
+    per page (``largest shard // limit + 1`` pages, the last one
+    under-limit) and two per sink call, the count of a strictly
+    sequential loop over the same pages."""
+    from kinesis_iterator_spark.streaming import ParquetEpochSink
+
+    limit = 60
+    src = make_source(spark, sf_dir, n_shards=8)
+    sink = ParquetEpochSink(str(tmp_path / "out"))
+    it = Iterator(src).set_saver(InMemorySaver()).set_fetch_limit(limit)
+    it.foreach_batch(sink)
+    base = _persisted(spark)
+    start = _next_job_id(spark)
+    assert it.run_until_drained() == N_EVENTS
+    pages = 150 // limit + 1  # the largest of the 8 shards holds 150
+    assert _next_job_id(spark) - start == 1 + 3 * pages + 2 * pages
+    assert _persisted(spark) == base
+    assert sink.read(spark).count() == N_EVENTS
+
+
 # -- the multi-shard fetch: job count and cursor filter ------------------------
 
 
@@ -389,11 +524,13 @@ def _next_job_id(spark) -> int:
 
 def test_fetch_jobs_do_not_grow_with_shard_count(spark, sf_dir):
     """O(1) Spark jobs per trigger: a multi-shard fetch and a handler-less
-    trigger submit the same jobs at 4 and at 8 shards — at most three once
-    the source has resolved its read (the window's shuffle, materialising
-    the persisted batch, the stats result; the stats aggregate sits on the
-    cached batch without a shuffle), plus the schema read of the first
-    fetch. The cursor set is a plan literal, so no broadcast job."""
+    trigger submit the same jobs at 4 and at 8 shards — at most three per
+    page once the source has resolved its read (the window's shuffle,
+    materialising the persisted batch, the stats result; the stats
+    aggregate sits on the cached batch without a shuffle), plus the schema
+    read of the first fetch. The trigger is counted with the next page it
+    prefetches, once that has finished. The cursor set is a plan literal,
+    so no broadcast job."""
     per_topology = []
     for n in (4, 8):
         src = make_source(spark, sf_dir, n_shards=n)
@@ -407,7 +544,10 @@ def test_fetch_jobs_do_not_grow_with_shard_count(spark, sf_dir):
         it._start_shards()
         start = _next_job_id(spark)
         assert it.poll_once() == 20 * n
-        per_topology.append((first, _next_job_id(spark) - start))
+        assert it._prefetch is not None  # every shard filled its page
+        _settle(it)
+        # jobs per page: the poll's own page and the one it prefetched
+        per_topology.append((first, (_next_job_id(spark) - start) / 2))
     assert per_topology[0] == per_topology[1], per_topology
     first, later = per_topology[0]
     assert later <= 3 and first <= later + 1, per_topology
