@@ -677,7 +677,433 @@ def curate_frame(
         raise
 
 
-class CorpusWriter:
+@dataclass(frozen=True)
+class Layer:
+    """One generation-pinned per-admit layer of a writer's index:
+    ``path`` under ``index_dir``, the ``order_cols`` a vacuum rewrite
+    clusters it by (its query key, so point scans stay parquet-min/max
+    pruned), and the hive ``partition_by`` columns its files sit
+    under."""
+
+    path: str
+    order_cols: tuple[str, ...]
+    partition_by: tuple[str, ...] = ()
+
+
+# Stamped on collapse tombstones when reconcile rebuilt a layer.
+_REBUILD_REASON = (
+    "layer history collapsed by reconcile (full rebuild from the data "
+    "of record)"
+)
+
+
+class _WriterBase:
+    """The lifecycle :class:`CorpusWriter` and :class:`EmbeddingWriter`
+    share: the data of record and its snapshot manifest (the writers'
+    checkpoint store, the role the reference's ``SequenceSaver`` plays
+    for stream positions — SURVEY §2.A A6/A8), the single-writer lease,
+    manifest retention and byte reclamation over the writer's layer
+    table, and the drift-histogram layer.
+
+    A subclass declares
+
+    - ``_ID_PREFIX`` — the writer-id prefix (``cw`` / ``ew``);
+    - ``_DATA_KEY`` / ``_DATA_ID`` — the data of record's stats key and
+      its sort key;
+    - ``_LAYERS`` — the per-admit :class:`Layer` table, the ONE list
+      :meth:`prune_snapshots` and :meth:`vacuum` walk (in order);
+    - ``_HIST`` — the drift-histogram layer's dir name, plus three
+      methods: ``_hist_of(frame)`` (a batch's (b, c) histogram),
+      ``_hist_source()`` (the rebuild source) and ``_hist_width()``
+      (the bucket domain size);
+
+    and the lease-free bodies ``_reconcile_locked`` /
+    ``_compact_locked``. Every public mutating entry is one call to
+    :meth:`_leased`; the ``_locked`` bodies never take the lease, so a
+    leased entry can call another's body (vacuum → prune, admit →
+    reconcile) without the inner release dropping the outer lease (the
+    r11 rule)."""
+
+    _ID_PREFIX: str
+    _DATA_KEY: str
+    _DATA_ID: tuple[str, ...]
+    _LAYERS: tuple[Layer, ...]
+    _HIST: str
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        data_dir: str,
+        index_dir: str,
+        drift_monitor: bool,
+        drift_warn: tuple[int, int] | None,
+        drift_refuse: bool,
+        drift_reconcile: bool = False,
+    ) -> None:
+        import os
+        import uuid
+
+        if drift_warn is not None and not drift_monitor:
+            raise ValueError(
+                "drift_warn requires drift_monitor=True (there is no "
+                "measurement to threshold otherwise)"
+            )
+        if (drift_refuse or drift_reconcile) and drift_warn is None:
+            flag = "drift_refuse" if drift_refuse else "drift_reconcile"
+            raise ValueError(f"{flag} requires drift_warn thresholds")
+        if drift_refuse and drift_reconcile:
+            raise ValueError(
+                "drift_refuse and drift_reconcile are exclusive: a "
+                "refused batch is never admitted, so there is nothing "
+                "to retrain over"
+            )
+        self.spark = spark
+        self._data_dir = data_dir
+        self.index_dir = index_dir
+        self.drift_monitor = drift_monitor
+        self.drift_warn = drift_warn
+        self.drift_refuse = drift_refuse
+        self._writer_id = (
+            f"{self._ID_PREFIX}-{os.getpid()}-{uuid.uuid4().hex[:12]}"
+        )
+        self._lease_gen = 0  # set by every public mutating entry
+
+    def _leased(self, body, *args):
+        """``body(*args)`` under the index's single-writer lease
+        (`incremental.acquire_lease`, VERDICT r10 #6): a second
+        concurrent writer fails loudly with `incremental.LeaseHeld`
+        instead of interleaving; a crashed holder's lease is taken over
+        after `incremental.LEASE_TTL_S`. The lease is released on every
+        exit, raising ones included. ``body`` runs lease-free code —
+        pass bound methods, so a test patching ``_admit_locked`` on the
+        class is honoured."""
+        from . import incremental
+
+        self._lease_gen = incremental.acquire_lease(
+            self.index_dir, self._writer_id, incremental.LEASE_TTL_S
+        )
+        try:
+            return body(*args)
+        finally:
+            incremental.release_lease(self.index_dir, self._writer_id)
+
+    def _fence(self) -> tuple[str, str, int]:
+        """(lease_dir, writer_id, gen) — the fencing token stamped into
+        staged-swap commits and verified before irreversible appends
+        (`incremental.verify_lease`): a writer resumed after a TTL
+        takeover fails loudly instead of interleaving (VERDICT r11 #5)."""
+        return (self.index_dir, self._writer_id, self._lease_gen)
+
+    # -- data of record --------------------------------------------------
+
+    def _data(self, as_of: int | None = None) -> DataFrame:
+        """The data of record; ``as_of`` reads EXACTLY the files the
+        first ``as_of`` recorded admissions committed
+        (`incremental.snapshot_files`, zero jobs)."""
+        from . import incremental
+
+        incremental.recover_data_dir(self._data_dir)
+        if as_of is None:
+            return self.spark.read.parquet(self._data_dir)
+        files = incremental.snapshot_files(self._data_dir, as_of)
+        # Explicit many-path LOCAL reads skip the distributed listing
+        # job (r18 — the snapshot_read discipline; schema inference
+        # stays, this is a schema-evolvable data-of-record dir).
+        with incremental._local_listing_scope(self.spark, files):
+            return self.spark.read.parquet(*files)
+
+    def snapshots(self) -> int:
+        """Recorded admission-snapshot generations of the data of record
+        (0 for one written before snapshots existed) — valid ``as_of``
+        values are 1..this."""
+        from . import incremental
+
+        return incremental.snapshot_gens(self._data_dir)
+
+    def _compact_data(self) -> dict:
+        """Snapshot-AWARE compaction of the data of record (VERDICT r12
+        #4), under the lease: each recorded admission's small part
+        files collapse to one id-sorted file and the manifest is
+        rewritten so every generation still maps to exactly its
+        content; staged swap, healed at every read."""
+        from . import incremental
+
+        return self._leased(
+            lambda: incremental.compact_data_snapshots(
+                self.spark, self._data_dir, self._DATA_ID, fence=self._fence()
+            )
+        )
+
+    def _export(self, as_of: int, dest_dir: str) -> dict:
+        """Generation ``as_of`` of the data of record published as a
+        standalone dir (`incremental.export_snapshot`), under the lease
+        so a concurrent vacuum cannot delete files mid-copy."""
+        from . import incremental
+
+        return self._leased(
+            incremental.export_snapshot, self._data_dir, as_of, dest_dir
+        )
+
+    # -- maintenance over the layer table --------------------------------
+
+    def reconcile(self) -> dict:
+        """Public entry: :meth:`_reconcile_locked` under the
+        single-writer lease (the :meth:`admit` contract)."""
+        return self._leased(self._reconcile_locked)
+
+    def compact(self) -> dict:
+        """Public entry: :meth:`_compact_locked` under the
+        single-writer lease (the :meth:`admit` contract)."""
+        return self._leased(self._compact_locked)
+
+    def prune_snapshots(self, before_gen: int) -> dict:
+        """Manifest retention across the whole writer family (VERDICT
+        r13 #3): collapse generations ``< before_gen`` on the data of
+        record AND every table layer together, so lockstep numbering
+        survives — every ``as_of >= before_gen`` read is bit-equal
+        before/after, older pins fail loudly naming the horizon.
+        Driver-side manifest rewrites only (each atomic; a crash
+        between dirs is healed by re-running — prune is idempotent),
+        under the writer lease with the fencing check. Layers whose
+        manifests lag the horizon (a crash inside a previous admit's
+        recording window) are skipped — the next admit's
+        `record_aligned_snapshot` collapses them anyway. Composes with
+        the data compaction in either order (pinned). Returns
+        {dir_basename: changed} per touched dir, the data of record
+        under ``corpus`` / ``store``."""
+        return self._leased(self._prune_snapshots_locked, before_gen)
+
+    def _layer_dirs(self, before_gen: int):
+        """(layer, dir) for each table layer that exists and records
+        generations through ``before_gen``, in table order — lazily, so
+        each layer is checked right before it is touched."""
+        import os
+
+        from . import incremental
+
+        for layer in self._LAYERS:
+            d = f"{self.index_dir}/{layer.path}"
+            if os.path.isdir(d) and incremental.snapshot_gens(d) >= before_gen:
+                yield layer, d
+
+    def _prune_snapshots_locked(self, before_gen: int) -> dict:
+        import os
+
+        from . import incremental
+
+        incremental.verify_lease(*self._fence())
+        incremental.recover_data_dir(self._data_dir, locked=True)
+        out = {
+            self._DATA_KEY: incremental.prune_snapshots(
+                self._data_dir, before_gen
+            )
+        }
+        for _, d in self._layer_dirs(before_gen):
+            out[os.path.basename(d)] = incremental.prune_snapshots(
+                d, before_gen
+            )
+        return out
+
+    def vacuum(self, before_gen: int) -> dict:
+        """Byte reclamation below the retention horizon (VERDICT r14
+        #1), family-wide under the writer lease: prune every manifest
+        to ``before_gen`` (idempotent), then physically rewrite the
+        data of record and each table layer's merged base generation
+        into ``⌈bytes/256 MB⌉`` files sorted by its key, dropping the
+        superseded pre-horizon small files at the staged swap.
+        Hive-partitioned layers re-emit their partition dirs (the
+        manifest keeps partition-dir-relative names, so ``basePath``
+        as-of readers still recover the column). Post-horizon as-of
+        history survives — unlike :meth:`compact`, which collapses it.
+
+        Every ``as_of >= before_gen`` read is bit-equal before/after,
+        older pins stay loudly refused, a crash anywhere self-heals at
+        the next read (`recover_data_dir`), and later admits keep
+        appending generations. Returns per-dir byte/file/row
+        accounting, keyed like :meth:`prune_snapshots`."""
+        return self._leased(self._vacuum_locked, before_gen)
+
+    def _vacuum_locked(self, before_gen: int) -> dict:
+        import os
+
+        from . import incremental
+
+        out: dict = self._prune_snapshots_locked(before_gen)
+        out[self._DATA_KEY] = incremental.vacuum_data_snapshots(
+            self.spark,
+            self._data_dir,
+            before_gen,
+            self._DATA_ID,
+            fence=self._fence(),
+        )
+        for layer, d in self._layer_dirs(before_gen):
+            out[os.path.basename(d)] = self._vacuum_layer(
+                layer, d, before_gen
+            )
+        return out
+
+    def _vacuum_layer(
+        self, layer: Layer, d: str, before_gen: int, dead=None
+    ) -> dict:
+        """One layer's vacuum rewrite; ``dead`` rows are dropped too
+        (a subclass hook supplies them — only tombstone-masked rows
+        are ever dead)."""
+        from . import incremental
+
+        return incremental.vacuum_data_snapshots(
+            self.spark,
+            d,
+            before_gen,
+            layer.order_cols,
+            dead=dead,
+            fence=self._fence(),
+            partition_by=layer.partition_by,
+        )
+
+    def _restage(self, name: str, frame: DataFrame) -> None:
+        """Swap ``frame`` in as the whole of index layer ``name``: it is
+        written to the ``.compact`` stage, the layer's manifest is
+        collapsed INTO the stage so files and manifest swap together
+        (older as_of pins then fail loudly — the VERDICT r13 rewrite
+        contract), and the fenced staged swap commits it."""
+        from . import incremental
+
+        d = f"{self.index_dir}/{name}"
+        frame.write.mode("overwrite").parquet(f"{d}.compact")
+        gens = incremental.snapshot_gens(d)
+        if gens:
+            incremental.collapse_snapshots(f"{d}.compact", gens)
+        incremental._swap_staged(self.index_dir, name, fence=self._fence())
+
+    # -- drift-histogram layer -------------------------------------------
+
+    def _hist_dir(self) -> str:
+        return f"{self.index_dir}/{self._HIST}"
+
+    def _hist_marker(self) -> str:
+        return f"{self._hist_dir()}.inprogress"
+
+    def _hist_stale(self) -> bool:
+        """Subclass hook: the stored layer is unusable for a reason the
+        marker and commit checks cannot see."""
+        return False
+
+    def _write_hist(self, hist: DataFrame, mode: str) -> None:
+        hist.write.mode(mode).parquet(self._hist_dir())
+
+    def _rebuild_hist(
+        self, gen: int | None = None, reason: str | None = None
+    ) -> None:
+        """Rewrite the whole layer from the rebuild source — the
+        bootstrap, reconcile and heal path — record generation ``gen``
+        when given, and clear any marker a crashed extend left."""
+        import os
+
+        from . import incremental
+
+        self._write_hist(self._hist_source(), "overwrite")
+        if gen is not None:
+            incremental.record_aligned_snapshot(
+                self._hist_dir(), gen, reason=reason
+            )
+        if os.path.exists(self._hist_marker()):
+            os.remove(self._hist_marker())
+
+    def _hist_or_heal(self) -> DataFrame:
+        """The stored per-segment (b, c) histogram (the reader sums
+        segments). Self-heals: an interrupted compact swap
+        forward-rolls, and a missing / uncommitted / marker-bracketed /
+        stale layer (data admitted before ``drift_monitor=True``, or a
+        crash inside the derived-layer append window) is rebuilt from
+        the rebuild source — which at every call site describes exactly
+        the pre-admit data the layer must describe."""
+        import os
+
+        from . import incremental
+
+        incremental._recover_staged(
+            self.index_dir, (self._HIST,), discard_stage=False
+        )
+        if (
+            os.path.exists(self._hist_marker())
+            or not _parquet_dir_committed(self._hist_dir())
+            or self._hist_stale()
+        ):
+            self._rebuild_hist()
+        return self.spark.read.parquet(self._hist_dir())
+
+    def _extend_hist(self, novel: DataFrame, gen: int) -> None:
+        """Append the admitted batch's histogram segment, bracketed by
+        a marker: a crash mid-append leaves the marker, and the next
+        reader rebuilds the whole layer from the (already-committed)
+        data of record instead of double-counting a half-written
+        segment. Then generation-pin the layer (r14: ``drift_refuse``
+        makes it admission-affecting state; a mid-admit heal rebuild
+        cleared the manifest, so the recording collapses — history,
+        never correctness)."""
+        import os
+
+        from . import incremental
+
+        open(self._hist_marker(), "w").close()
+        self._write_hist(self._hist_of(novel), "append")
+        os.remove(self._hist_marker())
+        incremental.record_aligned_snapshot(self._hist_dir(), gen)
+
+    def _drift(self, ref: DataFrame, batch: DataFrame) -> dict:
+        """{"drift_kl_fix", "drift_tv_fix"}: the exact fixed-point KL/TV
+        of ``batch``'s histogram against the reference ``ref``."""
+        from .queries.text import corpus_drift_from_hists
+
+        row = corpus_drift_from_hists(
+            self.spark, ref, self._hist_of(batch), self._hist_width()
+        ).collect()[0]
+        return {
+            "drift_kl_fix": int(row["kl_fix"]),
+            "drift_tv_fix": int(row["tv_fix"]),
+        }
+
+    def _drift_stats(self, batch: DataFrame, as_of: int | None) -> dict:
+        """The public ``drift_stats`` body: the reference is the stored
+        layer, or with ``as_of`` the layer as it stood after recorded
+        admission ``as_of`` (collapsed or pruned generations fail
+        loudly)."""
+        from . import incremental
+        from .queries.text import DRIFT_HIST_SCHEMA
+
+        if not self.drift_monitor:
+            raise ValueError(
+                f"this {type(self).__name__} was constructed without "
+                f"drift_monitor=True — there is no stored {self._HIST} "
+                "layer to measure against"
+            )
+        if as_of is None:
+            return self._drift(self._hist_or_heal(), batch)
+        incremental._recover_staged(
+            self.index_dir, (self._HIST,), discard_stage=False
+        )
+        ref = incremental.snapshot_read(
+            self.spark, self._hist_dir(), as_of, schema=DRIFT_HIST_SCHEMA
+        )
+        return self._drift(ref, batch)
+
+    def _compact_hist(self) -> None:
+        """Collapse the histogram layer's per-admit segments to ≤ width
+        rows — counts are additive, so the summed rewrite is
+        content-equivalent under the reader's own SUM (pinned)."""
+        import os
+
+        if self.drift_monitor and os.path.isdir(self._hist_dir()):
+            self._restage(
+                self._HIST,
+                self.spark.read.parquet(self._hist_dir())
+                .groupBy("b")
+                .agg(F.sum("c").cast("long").alias("c"))
+                .coalesce(1),
+            )
+
+
+class CorpusWriter(_WriterBase):
     """Batch-at-a-time corpus admission: the incremental form of
     :func:`curate_frame` for a corpus that GROWS (stream ingestion, daily
     crawl drops) instead of being rebuilt.
@@ -702,6 +1128,45 @@ class CorpusWriter:
     union may elect a different component representative). Exactness of
     the EXACT-dup layer is order-independent.
     """
+
+    _ID_PREFIX = "cw"
+    _DATA_KEY = "corpus"
+    _DATA_ID = ("doc_id",)
+    _HIST = "drift_ref"
+    # Every per-admit generation-pinned layer, in prune/vacuum order —
+    # ``bands`` before ``dropped``: the bands vacuum reads the
+    # tombstones as of the horizon (`_vacuum_layer`).
+    _LAYERS = (
+        Layer("digests", ("doc_id",)),
+        Layer("bands", ("band_id", "band_key")),
+        # Tombstones (VERDICT r15 #5): the ROWS are load-bearing
+        # forever — a bucket the cap rule ever dropped must stay
+        # masked, or post-vacuum appends to it would pair against a
+        # remnant whose earlier members are physically gone (the r10
+        # cap contract; a full union rebuild drops the bucket too). Row
+        # growth is bounded and tiny: ≤ total-band-rows-ever /
+        # MAX_BUCKET rows of two ids (SCALING.md). The per-admit small
+        # FILES, however, are pure layout overhead — consolidation-only
+        # vacuum.
+        Layer("dropped", ("band_id", "band_key")),
+        # Pre-stage digest layers, keyed for the pre-stage anti-joins.
+        Layer("paragraphs", ("h",)),
+        Layer("exact_substr", ("h",)),
+        Layer("drift_ref", ("b",)),
+        # BM25 relations, keyed for term pushdown.
+        Layer("bm25/postings", ("term", "doc_id")),
+        Layer("bm25/df", ("term",)),
+        Layer("bm25/doclen", ("doc_id",)),
+    )
+    # Pre-stage digest layers: name → (config flag, label in errors).
+    _PRESTAGE = {
+        "paragraphs": ("dedup_paragraphs", "paragraph"),
+        "exact_substr": ("dedup_exact_substr", "exact-substr"),
+    }
+
+    @property
+    def corpus_dir(self) -> str:
+        return self._data_dir
 
     def __init__(
         self,
@@ -757,48 +1222,20 @@ class CorpusWriter:
         reference corpus is never re-scanned (the guardrail VERDICT
         r10 #2 flagged as an op you had to remember to run). Off by
         default: +2 jobs per admit."""
-        self.spark = spark
-        self.corpus_dir = corpus_dir
-        self.index_dir = index_dir
+        super().__init__(
+            spark, corpus_dir, index_dir, drift_monitor, drift_warn,
+            drift_refuse,
+        )
         self.config = config or CurationConfig()
         self.benchmark_doc = benchmark_doc
         self.decontam_max_frac = decontam_max_frac
         self.auto_compact = auto_compact
         self.bm25_index = bm25_index
-        self.drift_monitor = drift_monitor
         self.drift_buckets = drift_buckets
-        if drift_warn is not None and not drift_monitor:
-            raise ValueError(
-                "drift_warn requires drift_monitor=True (there is no "
-                "measurement to threshold otherwise)"
-            )
-        if drift_refuse and drift_warn is None:
-            raise ValueError(
-                "drift_refuse requires drift_warn thresholds"
-            )
-        self.drift_warn = drift_warn
-        self.drift_refuse = drift_refuse
         self._bench_shingles: DataFrame | None = None
-        import os as _os
-        import uuid as _uuid
-
-        self._writer_id = "cw-{}-{}".format(
-            _os.getpid(), _uuid.uuid4().hex[:12]
-        )
-        self._lease_gen = 0  # set by every public mutating entry
 
     def _bootstrapped(self) -> bool:
         return _readable_meta(self.index_dir)
-
-    def _fence(self) -> tuple[str, str, int]:
-        """(lease_dir, writer_id, gen) — the fencing token stamped into
-        staged-swap commits and verified before irreversible appends
-        (`incremental.verify_lease`): a writer resumed after a TTL
-        takeover fails loudly instead of interleaving (VERDICT r11 #5)."""
-        return (self.index_dir, self._writer_id, self._lease_gen)
-
-    def _corpus_exists(self) -> bool:
-        return _parquet_dir_committed(self.corpus_dir)
 
     def corpus(self, as_of: int | None = None) -> DataFrame:
         """The admitted corpus so far (doc_id, lang, source, text,
@@ -807,25 +1244,7 @@ class CorpusWriter:
         the files the first ``as_of`` recorded admissions committed
         (`incremental.snapshot_files`, zero jobs): reproducible
         training snapshots, and isolation from an in-flight admit."""
-        from . import incremental
-
-        incremental.recover_data_dir(self.corpus_dir)
-        if as_of is None:
-            return self.spark.read.parquet(self.corpus_dir)
-        files = incremental.snapshot_files(self.corpus_dir, as_of)
-        # Explicit many-path LOCAL reads skip the distributed listing
-        # job (r18 — the snapshot_read discipline; schema inference
-        # stays, this is a schema-evolvable data-of-record dir).
-        with incremental._local_listing_scope(self.spark, files):
-            return self.spark.read.parquet(*files)
-
-    def snapshots(self) -> int:
-        """Recorded admission-snapshot generations (0 for a corpus
-        written before snapshots existed) — valid ``as_of`` values are
-        1..this."""
-        from . import incremental
-
-        return incremental.snapshot_gens(self.corpus_dir)
+        return self._data(as_of)
 
     def compact_corpus(self) -> dict:
         """Snapshot-AWARE compaction of the data of record (VERDICT r12
@@ -837,229 +1256,62 @@ class CorpusWriter:
         trade history for layout). Staged-swap crash discipline
         (`incremental.recover_data_dir` heals an interrupted commit at
         every read), under the writer lease."""
-        from . import incremental
+        return self._compact_data()
 
-        self._lease_gen = incremental.acquire_lease(
-            self.index_dir, self._writer_id, incremental.LEASE_TTL_S
-        )
-        try:
-            return incremental.compact_data_snapshots(
-                self.spark,
-                self.corpus_dir,
-                ("doc_id",),
-                fence=self._fence(),
-            )
-        finally:
-            incremental.release_lease(self.index_dir, self._writer_id)
-
-    def _pruneable_layer_dirs(self) -> list[str]:
-        import os
-
-        names = [
-            "digests",
-            "bands",
-            "dropped",
-            "paragraphs",
-            "exact_substr",
-            "drift_ref",
-        ]
-        dirs = [f"{self.index_dir}/{n}" for n in names]
-        dirs += [
-            f"{self._bm25_dir()}/{n}" for n in ("postings", "df", "doclen")
-        ]
-        return [d for d in dirs if os.path.isdir(d)]
-
-    def prune_snapshots(self, before_gen: int) -> dict:
-        """Manifest retention across the whole writer family (VERDICT
-        r13 #3): collapse generations ``< before_gen`` on the data of
-        record AND every derived layer together, so lockstep numbering
-        survives — ``corpus(as_of>=before_gen)`` and every from-index
-        ``as_of>=before_gen`` read are bit-equal before/after, older
-        pins fail loudly naming the horizon. Driver-side manifest
-        rewrites only (each atomic; a crash between dirs is healed by
-        re-running — prune is idempotent), under the writer lease with
-        the fencing check. Layers whose manifests lag the horizon (a
-        crash inside a previous admit's recording window) are skipped —
-        the next admit's `record_aligned_snapshot` collapses them
-        anyway. Composes with :meth:`compact_corpus` in either order
-        (pinned). Returns {dir_basename: changed} per touched dir."""
-        from . import incremental
-
-        self._lease_gen = incremental.acquire_lease(
-            self.index_dir, self._writer_id, incremental.LEASE_TTL_S
-        )
-        try:
-            return self._prune_snapshots_locked(before_gen)
-        finally:
-            incremental.release_lease(self.index_dir, self._writer_id)
-
-    def _prune_snapshots_locked(self, before_gen: int) -> dict:
-        """Family-wide prune body, callable from other LEASE-HELD entry
-        points (:meth:`vacuum`) — the r11 rule: internal calls route to
-        unlocked bodies or the inner release drops the outer lease."""
-        import os
-
-        from . import incremental
-
-        incremental.verify_lease(*self._fence())
-        incremental.recover_data_dir(self.corpus_dir, locked=True)
-        out = {
-            "corpus": incremental.prune_snapshots(
-                self.corpus_dir, before_gen
-            )
-        }
-        for d in self._pruneable_layer_dirs():
-            if incremental.snapshot_gens(d) >= before_gen:
-                out[os.path.basename(d)] = incremental.prune_snapshots(
-                    d, before_gen
-                )
-        return out
-
-    def vacuum(self, before_gen: int) -> dict:
-        """Byte reclamation below the retention horizon (VERDICT r14
-        #1), family-wide under the writer lease: prune every manifest
-        to ``before_gen`` (idempotent), then physically rewrite
-
-        - the CORPUS data of record — the merged base generation's
-          per-admit small files collapse to ``⌈bytes/256 MB⌉``
-          doc_id-sorted files, the superseded pre-horizon files are
-          dropped at the staged swap;
-        - the dedup index's ``digests`` layer — same consolidation;
-        - the dedup index's ``bands`` layer — consolidation PLUS
-          physical deletion of band rows whose bucket a generation
-          ``<= before_gen`` tombstone masks: every ``as_of >=
-          before_gen`` serve anti-joins those rows away
-          (`dedup_against_index`), so dropping them is serve-invisible
-          (pinned); the drift baseline in ``meta.json`` shrinks by the
-          same count (conservative — drift can only warn sooner).
-
-        Every other FLAT per-admit layer is consolidated too (no
-        masked rows there — ``dead=None``), sorted by its query key so
-        point scans stay parquet-min/max-pruned: the BM25
-        postings/df/doclen (term-pushdown key), the paragraph and
-        exact-substr digest layers (digest key — the pre-stage
-        anti-joins), and the drift reference histogram (bucket key).
-        Their post-horizon as-of history survives — unlike
-        :meth:`compact`, which collapses it.
-
-        ``corpus(as_of >= before_gen)`` is bit-equal before/after,
-        older pins stay loudly refused, a crash anywhere self-heals at
-        the next read (`recover_data_dir`), and later admits keep
-        appending generations. Returns per-dir byte/file/row
-        accounting."""
+    def _vacuum_layer(
+        self, layer: Layer, d: str, before_gen: int, dead=None
+    ) -> dict:
+        """The ``bands`` hook of :meth:`vacuum`: consolidation PLUS
+        physical deletion of band rows whose bucket a generation
+        ``<= before_gen`` tombstone masks — every ``as_of >=
+        before_gen`` serve anti-joins those rows away
+        (`dedup_against_index`), so dropping them is serve-invisible
+        (pinned); the drift baseline in ``meta.json`` shrinks by the
+        same count (conservative — drift can only warn sooner). Every
+        other layer has no masked rows (``dead=None``)."""
         import json
         import os
 
         from . import incremental
 
-        self._lease_gen = incremental.acquire_lease(
-            self.index_dir, self._writer_id, incremental.LEASE_TTL_S
-        )
-        try:
-            out: dict = self._prune_snapshots_locked(before_gen)
-            out["corpus"] = incremental.vacuum_data_snapshots(
-                self.spark,
-                self.corpus_dir,
-                before_gen,
-                ("doc_id",),
-                fence=self._fence(),
+        if layer.path != "bands":
+            return super()._vacuum_layer(layer, d, before_gen, dead)
+        # Dead rows: buckets tombstoned at or below the horizon mask
+        # their stored rows for EVERY servable as_of. Only a
+        # horizon-resolvable tombstone manifest can prove membership —
+        # a lagging one downgrades to consolidation-only (dead=None),
+        # never guesses.
+        drop_dir = f"{self.index_dir}/dropped"
+        if (
+            os.path.isdir(drop_dir)
+            and incremental.snapshot_gens(drop_dir) >= before_gen
+        ):
+            dead = incremental._read_dropped(
+                self.spark, self.index_dir, as_of=before_gen
             )
-            dig = f"{self.index_dir}/digests"
-            if (
-                os.path.isdir(dig)
-                and incremental.snapshot_gens(dig) >= before_gen
-            ):
-                out["digests"] = incremental.vacuum_data_snapshots(
-                    self.spark,
-                    dig,
-                    before_gen,
-                    ("doc_id",),
-                    fence=self._fence(),
-                )
-            bands = f"{self.index_dir}/bands"
-            if (
-                os.path.isdir(bands)
-                and incremental.snapshot_gens(bands) >= before_gen
-            ):
-                # Dead rows: buckets tombstoned at or below the horizon
-                # mask their stored rows for EVERY servable as_of. Only
-                # a horizon-resolvable tombstone manifest can prove
-                # membership — a lagging one downgrades to
-                # consolidation-only (dead=None), never guesses.
-                dead = None
-                drop_dir = f"{self.index_dir}/dropped"
-                if (
-                    os.path.isdir(drop_dir)
-                    and incremental.snapshot_gens(drop_dir) >= before_gen
-                ):
-                    dead = incremental._read_dropped(
-                        self.spark, self.index_dir, as_of=before_gen
-                    )
-                out["bands"] = incremental.vacuum_data_snapshots(
-                    self.spark,
-                    bands,
-                    before_gen,
-                    ("band_id", "band_key"),
-                    dead=dead,
-                    fence=self._fence(),
-                )
-                removed = out["bands"]["rows_dropped"]
-                # Crash window (ADVICE r15): this meta rewrite is NOT
-                # atomic with the bands staged swap above. A crash
-                # in between leaves `base_band_rows` inflated by
-                # `removed`, so the band-growth compaction trigger
-                # fires LATER than intended (ratio reads low) — never
-                # earlier, never wrong data. The next `compact` heals
-                # it exactly: `compact_index` recomputes the baseline
-                # from the rewritten bands dir (`_dir_rows`).
-                # Recomputing here instead would fold post-compaction
-                # appends into the baseline and RESET growth
-                # accounting, which is worse than the window.
-                if removed:
-                    meta_path = f"{self.index_dir}/meta.json"
-                    with open(meta_path) as fh:
-                        meta = json.load(fh)
-                    base = meta.get("base_band_rows")
-                    if base is not None:
-                        meta["base_band_rows"] = max(0, base - removed)
-                        tmp = meta_path + ".tmp"
-                        with open(tmp, "w") as fh:
-                            json.dump(meta, fh)
-                        os.replace(tmp, meta_path)
-            for d, order in (
-                (f"{self._bm25_dir()}/postings", ("term", "doc_id")),
-                (f"{self._bm25_dir()}/df", ("term",)),
-                (f"{self._bm25_dir()}/doclen", ("doc_id",)),
-                (self._paras_dir(), ("h",)),
-                (self._substr_dir(), ("h",)),
-                (self._drift_dir(), ("b",)),
-                # Tombstones (VERDICT r15 #5): the ROWS are load-bearing
-                # forever — a bucket the cap rule ever dropped must stay
-                # masked, or post-vacuum appends to it would pair
-                # against a remnant whose earlier members are physically
-                # gone (the r10 cap contract; a full union rebuild drops
-                # the bucket too). Row growth is bounded and tiny:
-                # ≤ total-band-rows-ever / MAX_BUCKET rows of two ids
-                # (SCALING.md). The per-admit small FILES, however, are
-                # pure layout overhead — consolidation-only vacuum.
-                (f"{self.index_dir}/dropped", ("band_id", "band_key")),
-            ):
-                if (
-                    os.path.isdir(d)
-                    and incremental.snapshot_gens(d) >= before_gen
-                ):
-                    out[os.path.basename(d)] = (
-                        incremental.vacuum_data_snapshots(
-                            self.spark,
-                            d,
-                            before_gen,
-                            order,
-                            fence=self._fence(),
-                        )
-                    )
-            return out
-        finally:
-            incremental.release_lease(self.index_dir, self._writer_id)
+        out = super()._vacuum_layer(layer, d, before_gen, dead)
+        removed = out["rows_dropped"]
+        # Crash window (ADVICE r15): this meta rewrite is NOT atomic
+        # with the bands staged swap above. A crash in between leaves
+        # `base_band_rows` inflated by `removed`, so the band-growth
+        # compaction trigger fires LATER than intended (ratio reads
+        # low) — never earlier, never wrong data. The next `compact`
+        # heals it exactly: `compact_index` recomputes the baseline
+        # from the rewritten bands dir (`_dir_rows`). Recomputing here
+        # instead would fold post-compaction appends into the baseline
+        # and RESET growth accounting, which is worse than the window.
+        if removed:
+            meta_path = f"{self.index_dir}/meta.json"
+            with open(meta_path) as fh:
+                meta = json.load(fh)
+            base = meta.get("base_band_rows")
+            if base is not None:
+                meta["base_band_rows"] = max(0, base - removed)
+                tmp = meta_path + ".tmp"
+                with open(tmp, "w") as fh:
+                    json.dump(meta, fh)
+                os.replace(tmp, meta_path)
+        return out
 
     def export_corpus(self, as_of: int, dest_dir: str) -> dict:
         """Publish the corpus as of generation ``as_of`` as a
@@ -1067,17 +1319,7 @@ class CorpusWriter:
         writer lease so a concurrent vacuum cannot delete files
         mid-copy. The export is bit-equal to ``corpus(as_of)`` and
         independent of this family's later maintenance (pinned)."""
-        from . import incremental
-
-        self._lease_gen = incremental.acquire_lease(
-            self.index_dir, self._writer_id, incremental.LEASE_TTL_S
-        )
-        try:
-            return incremental.export_snapshot(
-                self.corpus_dir, as_of, dest_dir
-            )
-        finally:
-            incremental.release_lease(self.index_dir, self._writer_id)
+        return self._export(as_of, dest_dir)
 
     def _contaminated_ids(self, survivors: DataFrame) -> DataFrame:
         """doc_ids among the batch survivors whose distinct hashed
@@ -1125,15 +1367,7 @@ class CorpusWriter:
         `incremental.LeaseHeld` instead of interleaving crash markers;
         a crashed holder's lease is taken over after
         `incremental.LEASE_TTL_S`."""
-        from . import incremental
-
-        self._lease_gen = incremental.acquire_lease(
-            self.index_dir, self._writer_id, incremental.LEASE_TTL_S
-        )
-        try:
-            return self._admit_locked(batch_doc)
-        finally:
-            incremental.release_lease(self.index_dir, self._writer_id)
+        return self._leased(self._admit_locked, batch_doc)
 
     def _admit_locked(self, batch_doc: DataFrame) -> dict[str, int]:
         """Run one batch through gates + in-batch dedup + (optional)
@@ -1172,7 +1406,9 @@ class CorpusWriter:
         # and silently discard everything previously admitted — instead,
         # rebuild the index from the corpus (reconcile) and proceed down
         # the normal append path.
-        if not self._bootstrapped() and self._corpus_exists():
+        if not self._bootstrapped() and _parquet_dir_committed(
+            self.corpus_dir
+        ):
             self._reconcile_locked()
 
         cfg = self.config
@@ -1185,19 +1421,7 @@ class CorpusWriter:
             # (_pre_stages), incremental state injected.
             from dataclasses import replace
 
-            seen = (
-                self._stored_paragraphs()
-                if cfg.dedup_paragraphs and self._bootstrapped()
-                else None
-            )
-            seen_sub = (
-                self._stored_substr()
-                if cfg.dedup_exact_substr and self._bootstrapped()
-                else None
-            )
-            batch_doc = _pre_stages(
-                batch_doc, cfg, seen_paras=seen, seen_substr=seen_sub
-            )
+            batch_doc = self.pre_stage_batch(batch_doc)
             # Every pre-applied rewrite flag is cleared for the inner
             # curate — dedup_exact_substr is NOT idempotent, so leaving
             # it on would strip spans twice; split_long already ran in
@@ -1385,19 +1609,9 @@ class CorpusWriter:
                     # arriving distribution post-gates, pre-dedup): a
                     # drift alarm should fire on what arrived, not be
                     # masked because most of it was deduped away.
-                    from .queries.text import (
-                        corpus_drift_from_hists,
-                        corpus_hist,
+                    stats.update(
+                        self._drift(self._hist_or_heal(), survivors)
                     )
-
-                    drow = corpus_drift_from_hists(
-                        self.spark,
-                        self._drift_hist_or_heal(),
-                        corpus_hist(survivors, self.drift_buckets),
-                        self.drift_buckets,
-                    ).collect()[0]
-                    stats["drift_kl_fix"] = int(drow["kl_fix"])
-                    stats["drift_tv_fix"] = int(drow["tv_fix"])
                     # Threshold policy BEFORE any state change: a
                     # refusal here rolls back nothing (VERDICT r11 #3).
                     _apply_drift_policy(
@@ -1459,13 +1673,13 @@ class CorpusWriter:
                     # order (the corpus append above already committed
                     # their text), so the layer is conservative-correct
                     # at every crash point.
-                    self._write_paragraphs(novel, "append")
+                    self._write_digests("paragraphs", novel, "append")
                 if self.config.dedup_exact_substr:
                     # Same ordering invariant as the paragraph layer:
                     # record the ADMITTED docs' window digests before
                     # any index-side write, so a crash can only leave
                     # the layer covering text the corpus holds.
-                    self._write_substr(novel, "append")
+                    self._write_digests("exact_substr", novel, "append")
                 # Generation-pin the pre-stage layers right after their
                 # appends (r14): a crash between a write and its
                 # recording misaligns the manifest, which the next
@@ -1497,25 +1711,24 @@ class CorpusWriter:
                     # stale (healed by reconcile, like every derived
                     # layer); a crash MID-append leaves the marker and
                     # the next reader rebuilds instead of
-                    # double-counting.
-                    self._extend_drift(novel)
-                    # Generation-pin the layer (r14: drift_refuse makes
-                    # the reference histogram ADMISSION-affecting state
-                    # — drift_stats(batch, as_of=g) replays the
-                    # would-it-have-refused measurement of any era). A
-                    # mid-admit heal rebuild cleared the manifest; the
-                    # recording then collapses — history, never
-                    # correctness.
-                    incremental.record_aligned_snapshot(
-                        self._drift_dir(), stats["snapshot"]
-                    )
+                    # double-counting. The extend also generation-pins
+                    # the layer (r14: drift_refuse makes the reference
+                    # histogram ADMISSION-affecting state —
+                    # drift_stats(batch, as_of=g) replays the
+                    # would-it-have-refused measurement of any era).
+                    self._extend_hist(novel, stats["snapshot"])
                 if self.auto_compact:
                     drift = incremental.index_drift(self.index_dir)
                     if (
                         drift is not None
                         and drift > incremental.COMPACT_DRIFT_FACTOR
                     ):
-                        incremental.compact_index(self.spark, self.index_dir)
+                        # Fenced like every staged swap under the lease:
+                        # a writer taken over mid-admit must not swap
+                        # bands/dropped under the new holder.
+                        incremental.compact_index(
+                            self.spark, self.index_dir, fence=self._fence()
+                        )
             else:
                 _stage_counts()
                 stats["rejected_exact"] = 0
@@ -1535,10 +1748,9 @@ class CorpusWriter:
                 # behind the corpus once meta is readable (a crash
                 # anywhere in this window leaves no meta.json, which
                 # admit detects and routes through reconcile).
-                if self.config.dedup_paragraphs:
-                    self._write_paragraphs(self.corpus(), "overwrite")
-                if self.config.dedup_exact_substr:
-                    self._write_substr(self.corpus(), "overwrite")
+                for name, (flag, _) in self._PRESTAGE.items():
+                    if getattr(self.config, flag):
+                        self._write_digests(name, self.corpus(), "overwrite")
                 self._record_prestage_gens(stats["snapshot"])
                 # cur.bands (when exposed) covers the eligible superset
                 # of the just-written corpus; _write_band_files filters
@@ -1560,10 +1772,7 @@ class CorpusWriter:
                     # Bootstrap segment 0 = the whole just-written
                     # corpus; no drift stats (there is no pre-admit
                     # reference to measure against).
-                    self._write_drift_hist(self.corpus(), "overwrite")
-                    incremental.record_aligned_snapshot(
-                        self._drift_dir(), stats["snapshot"]
-                    )
+                    self._rebuild_hist(stats["snapshot"])
             return stats
         finally:
             if batch_bands is not None and batch_bands is not cur.bands:
@@ -1693,86 +1902,60 @@ class CorpusWriter:
             self.spark, self._bm25_dir(), query_terms, topk=topk, **kw
         )
 
-    def _paras_dir(self) -> str:
-        return f"{self.index_dir}/paragraphs"
-
-    def _stored_paragraphs(self, as_of: int | None = None) -> DataFrame:
-        """The stored paragraph-digest layer (single ``h`` column). A
-        bootstrapped index WITHOUT the layer means the corpus predates
-        `dedup_paragraphs=True` — its paragraphs were never recorded,
-        so silently treating the layer as empty would re-admit every
-        one of them; reconcile() builds the layer from the corpus.
-        ``as_of`` (r14): serve the layer exactly as it stood after
-        recorded admission ``as_of`` (generation-pinned, the
-        `_record_prestage_gens` manifests)."""
+    def _stored_digests(
+        self, name: str, as_of: int | None = None
+    ) -> DataFrame:
+        """The stored pre-stage digest layer ``name`` (single ``h``
+        column): ``paragraphs`` — one row per admitted paragraph — or
+        ``exact_substr`` — one row per distinct ``w``-word window of
+        admitted text. A bootstrapped index WITHOUT the layer means the
+        corpus predates the layer's config flag — its digests were
+        never recorded, so silently treating the layer as empty would
+        re-admit every one of them; reconcile() builds the layer from
+        the corpus. The digest parameters (``paragraph_sep``,
+        ``exact_substr_w``) must stay constant across the corpus's
+        writer lifetimes (digests of different parameters never match,
+        silently disabling the cross-batch check). ``as_of`` (r14):
+        serve the layer exactly as it stood after recorded admission
+        ``as_of`` (generation-pinned, the `_record_prestage_gens`
+        manifests)."""
         import os
 
         from . import incremental
 
-        # Self-heal an interrupted compact() swap — the paragraph
-        # pre-stage can read the layer before anything calls _check_meta.
+        # Self-heal an interrupted compact() swap — the pre-stage can
+        # read the layer before anything calls _check_meta.
         incremental._recover_staged(
-            self.index_dir, ("paragraphs",), discard_stage=False
+            self.index_dir, (name,), discard_stage=False
         )
-        if not os.path.isdir(self._paras_dir()):
+        d = f"{self.index_dir}/{name}"
+        if not os.path.isdir(d):
+            flag, label = self._PRESTAGE[name]
             raise ValueError(
-                f"index at {self.index_dir} has no paragraph layer but "
-                "the writer is configured with dedup_paragraphs=True — "
-                "run reconcile() once to build it from the corpus."
+                f"index at {self.index_dir} has no {label} layer but the "
+                f"writer is configured with {flag}=True — run "
+                "reconcile() once to build it from the corpus."
             )
         if as_of is not None:
-            return incremental.snapshot_read(
-                self.spark, self._paras_dir(), as_of
-            )
-        return self.spark.read.parquet(self._paras_dir())
+            return incremental.snapshot_read(self.spark, d, as_of)
+        return self.spark.read.parquet(d)
 
-    def _write_paragraphs(self, doc: DataFrame, mode: str) -> None:
-        from .queries.dedup import paragraph_digests
+    def _write_digests(
+        self, name: str, doc: DataFrame, mode: str, distinct: bool = False
+    ) -> None:
+        """Write ``doc``'s digests into pre-stage layer ``name``
+        (``distinct``: de-duplicated first — the window digests
+        already are)."""
+        from .queries.dedup import exact_substr_digests, paragraph_digests
 
-        paragraph_digests(
-            doc.select("doc_id", "text"), sep=self.config.paragraph_sep
-        ).write.mode(mode).parquet(self._paras_dir())
-
-    def _substr_dir(self) -> str:
-        return f"{self.index_dir}/exact_substr"
-
-    def _stored_substr(self, as_of: int | None = None) -> DataFrame:
-        """The stored ExactSubstr window-digest layer (single ``h``
-        column, one row per distinct ``w``-word window of admitted
-        text). A bootstrapped index WITHOUT the layer means the corpus
-        predates `dedup_exact_substr=True` — treating it as empty would
-        let later batches re-admit every stored span; reconcile()
-        builds the layer from the corpus. The window width is the
-        writer config's ``exact_substr_w`` — like ``paragraph_sep``,
-        it must stay constant across the corpus's writer lifetimes
-        (digests of different widths never match, silently disabling
-        the cross-batch check)."""
-        import os
-
-        from . import incremental
-
-        incremental._recover_staged(
-            self.index_dir, ("exact_substr",), discard_stage=False
-        )
-        if not os.path.isdir(self._substr_dir()):
-            raise ValueError(
-                f"index at {self.index_dir} has no exact-substr layer "
-                "but the writer is configured with "
-                "dedup_exact_substr=True — run reconcile() once to "
-                "build it from the corpus."
-            )
-        if as_of is not None:
-            return incremental.snapshot_read(
-                self.spark, self._substr_dir(), as_of
-            )
-        return self.spark.read.parquet(self._substr_dir())
-
-    def _write_substr(self, doc: DataFrame, mode: str) -> None:
-        from .queries.dedup import exact_substr_digests
-
-        exact_substr_digests(
-            doc.select("doc_id", "text"), w=self.config.exact_substr_w
-        ).write.mode(mode).parquet(self._substr_dir())
+        doc = doc.select("doc_id", "text")
+        if name == "paragraphs":
+            rows = paragraph_digests(doc, sep=self.config.paragraph_sep)
+        else:
+            rows = exact_substr_digests(doc, w=self.config.exact_substr_w)
+        if distinct:
+            rows = rows.distinct()
+        rows.write.mode(mode).parquet(f"{self.index_dir}/{name}")
 
     def pre_stage_batch(
         self, batch_doc: DataFrame, as_of: int | None = None
@@ -1800,25 +1983,18 @@ class CorpusWriter:
             or cfg.split_long is not None
         ):
             return batch_doc
-        seen = (
-            self._stored_paragraphs(as_of=as_of)
-            if cfg.dedup_paragraphs and self._bootstrapped()
+        seen = {
+            name: self._stored_digests(name, as_of=as_of)
+            if getattr(cfg, flag) and self._bootstrapped()
             else None
-        )
-        seen_sub = (
-            self._stored_substr(as_of=as_of)
-            if cfg.dedup_exact_substr and self._bootstrapped()
-            else None
-        )
+            for name, (flag, _) in self._PRESTAGE.items()
+        }
         return _pre_stages(
-            batch_doc, cfg, seen_paras=seen, seen_substr=seen_sub
+            batch_doc,
+            cfg,
+            seen_paras=seen["paragraphs"],
+            seen_substr=seen["exact_substr"],
         )
-
-    def _drift_dir(self) -> str:
-        return f"{self.index_dir}/drift_ref"
-
-    def _drift_marker(self) -> str:
-        return f"{self.index_dir}/drift_ref.inprogress"
 
     def _drift_buckets_path(self) -> str:
         return f"{self.index_dir}/drift_ref.buckets.json"
@@ -1832,68 +2008,42 @@ class CorpusWriter:
         except (OSError, ValueError, KeyError, TypeError):
             return None
 
-    def _write_drift_hist(self, doc: DataFrame, mode: str) -> None:
+    def _hist_of(self, doc: DataFrame) -> DataFrame:
+        """The hashed-unigram (b, c) histogram of ``doc``'s text."""
+        from .queries.text import corpus_hist
+
+        return corpus_hist(doc.select("text"), self.drift_buckets)
+
+    def _hist_source(self) -> DataFrame:
+        return self._hist_of(self.corpus())
+
+    def _hist_width(self) -> int:
+        return self.drift_buckets
+
+    def _hist_stale(self) -> bool:
+        """Bucket-domain mismatch (or a legacy un-pinned layer): rebuild
+        from the corpus under THIS writer's B — mixing domains would
+        silently corrupt every KL/TV after it (ADVICE r11)."""
+        return self._stored_drift_buckets() != self.drift_buckets
+
+    def _write_hist(self, hist: DataFrame, mode: str) -> None:
         """Write a layer segment; a REBUILD (mode=overwrite) also pins
         the bucket count in a sidecar (ADVICE r11: without the pin, a
         writer constructed with a different ``drift_buckets`` over an
         existing layer silently mixes hash domains — stored segments
         mod old B, batch histogram mod new B — and reports wrong KL/TV
         with no error). Appends inherit the pinned domain: every
-        append in admit is preceded by `_drift_hist_or_heal`, which
-        rebuilds on mismatch first."""
+        append in admit is preceded by `_hist_or_heal`, which rebuilds
+        on mismatch first."""
         import json
         import os
 
-        from .queries.text import corpus_hist
-
-        corpus_hist(doc.select("text"), self.drift_buckets).write.mode(
-            mode
-        ).parquet(self._drift_dir())
+        super()._write_hist(hist, mode)
         if mode == "overwrite":
             tmp = self._drift_buckets_path() + ".tmp"
             with open(tmp, "w") as fh:
                 json.dump({"buckets": self.drift_buckets}, fh)
             os.replace(tmp, self._drift_buckets_path())
-
-    def _drift_hist_or_heal(self) -> DataFrame:
-        """The stored reference histogram (per-segment (b, c) rows; the
-        reader sums segments). Self-heals like `_extend_bm25`: an
-        interrupted compact swap forward-rolls, and a missing /
-        uncommitted / marker-bracketed layer (corpus admitted before
-        ``drift_monitor=True``, or a crash inside the derived-layer
-        append window) is rebuilt from the corpus — which at every
-        call site equals exactly the text the layer must describe."""
-        import os
-
-        from . import incremental
-
-        incremental._recover_staged(
-            self.index_dir, ("drift_ref",), discard_stage=False
-        )
-        if (
-            os.path.exists(self._drift_marker())
-            or not _parquet_dir_committed(self._drift_dir())
-            # Bucket-domain mismatch (or a legacy un-pinned layer):
-            # rebuild from the corpus under THIS writer's B — the
-            # existing heal path; mixing domains would silently corrupt
-            # every KL/TV after it (ADVICE r11).
-            or self._stored_drift_buckets() != self.drift_buckets
-        ):
-            self._write_drift_hist(self.corpus(), "overwrite")
-            if os.path.exists(self._drift_marker()):
-                os.remove(self._drift_marker())
-        return self.spark.read.parquet(self._drift_dir())
-
-    def _extend_drift(self, novel: DataFrame) -> None:
-        """Append the admitted batch's histogram segment, bracketed by
-        a marker: a crash mid-append leaves the marker, and the next
-        reader rebuilds the whole layer from the (already-committed)
-        corpus instead of double-counting a half-written segment."""
-        import os
-
-        open(self._drift_marker(), "w").close()
-        self._write_drift_hist(novel, "append")
-        os.remove(self._drift_marker())
 
     def drift_stats(self, doc: DataFrame, as_of: int | None = None) -> dict:
         """KL/TV of ``doc``'s text distribution vs the stored reference
@@ -1906,50 +2056,7 @@ class CorpusWriter:
         compact()/reconcile() or pruned below the retention horizon
         fail loudly. Returns {"drift_kl_fix", "drift_tv_fix"} (÷
         DSIR_FIX for the float values)."""
-        from . import incremental
-        from .queries.text import corpus_drift_from_hists, corpus_hist
-
-        if not self.drift_monitor:
-            raise ValueError(
-                "this CorpusWriter was constructed without "
-                "drift_monitor=True — there is no stored reference "
-                "histogram to measure against"
-            )
-        if as_of is None:
-            ref = self._drift_hist_or_heal()
-        else:
-            incremental._recover_staged(
-                self.index_dir, ("drift_ref",), discard_stage=False
-            )
-            from .queries.text import DRIFT_HIST_SCHEMA
-
-            ref = incremental.snapshot_read(
-                self.spark, self._drift_dir(), as_of,
-                schema=DRIFT_HIST_SCHEMA,
-            )
-        row = corpus_drift_from_hists(
-            self.spark,
-            ref,
-            corpus_hist(doc.select("text"), self.drift_buckets),
-            self.drift_buckets,
-        ).collect()[0]
-        return {
-            "drift_kl_fix": int(row["kl_fix"]),
-            "drift_tv_fix": int(row["tv_fix"]),
-        }
-
-    def reconcile(self) -> dict:
-        """Public entry: :meth:`_reconcile_locked` under the
-        single-writer lease (the :meth:`admit` contract)."""
-        from . import incremental
-
-        self._lease_gen = incremental.acquire_lease(
-            self.index_dir, self._writer_id, incremental.LEASE_TTL_S
-        )
-        try:
-            return self._reconcile_locked()
-        finally:
-            incremental.release_lease(self.index_dir, self._writer_id)
+        return self._drift_stats(doc, as_of)
 
     def _reconcile_locked(self) -> dict:
         """Rebuild the dedup index from the corpus as currently written —
@@ -1963,34 +2070,22 @@ class CorpusWriter:
         the stored window-digest layer likewise (and this is the
         late-enablement path for a corpus admitted before the flag)."""
         from . import incremental
-        from .queries.dedup import paragraph_digests
 
-        rebuild_reason = (
-            "layer history collapsed by reconcile (full rebuild from "
-            "the data of record)"
-        )
+        gen = incremental.snapshot_gens(self.corpus_dir)
         meta = incremental.write_index(self.corpus(), self.index_dir)
-        self._record_dedup_gens(
-            incremental.snapshot_gens(self.corpus_dir),
-            reason=rebuild_reason,
-        )
-        if self.config.dedup_paragraphs:
-            paragraph_digests(
-                self.corpus().select("doc_id", "text"),
-                sep=self.config.paragraph_sep,
-            ).distinct().write.mode("overwrite").parquet(self._paras_dir())
-        if self.config.dedup_exact_substr:
-            # Also the late-enablement path: _stored_substr refuses on a
-            # corpus whose windows were never recorded until this runs.
-            self._write_substr(self.corpus(), "overwrite")
+        self._record_dedup_gens(gen, reason=_REBUILD_REASON)
+        for name, (flag, _) in self._PRESTAGE.items():
+            # Also the late-enablement path: _stored_digests refuses on
+            # a corpus whose digests were never recorded until this runs.
+            if getattr(self.config, flag):
+                self._write_digests(
+                    name, self.corpus(), "overwrite", distinct=True
+                )
         # A rebuild collapses the pre-stage layers' generation history
         # (the overwrites took the manifests with the dirs); numbering
         # stays aligned with the corpus, older as_of pins fail loudly
         # (the bm25 contract below).
-        self._record_prestage_gens(
-            incremental.snapshot_gens(self.corpus_dir),
-            reason=rebuild_reason,
-        )
+        self._record_prestage_gens(gen, reason=_REBUILD_REASON)
         if self.bm25_index:
             from .queries.retrieval import write_bm25_index
 
@@ -2002,37 +2097,11 @@ class CorpusWriter:
             # A rebuild collapses generation history (the manifests
             # went with the overwritten dirs); numbering stays aligned
             # with the corpus, older as_of pins fail loudly.
-            self._record_bm25_gens(
-                incremental.snapshot_gens(self.corpus_dir),
-                bm_meta,
-                reason=rebuild_reason,
-            )
+            self._record_bm25_gens(gen, bm_meta, reason=_REBUILD_REASON)
         if self.drift_monitor:
             # Also the staleness-heal and late-enablement path.
-            import os
-
-            self._write_drift_hist(self.corpus(), "overwrite")
-            incremental.record_aligned_snapshot(
-                self._drift_dir(),
-                incremental.snapshot_gens(self.corpus_dir),
-                reason=rebuild_reason,
-            )
-            if os.path.exists(self._drift_marker()):
-                os.remove(self._drift_marker())
+            self._rebuild_hist(gen, _REBUILD_REASON)
         return meta
-
-    def compact(self) -> dict:
-        """Public entry: :meth:`_compact_locked` under the
-        single-writer lease (the :meth:`admit` contract)."""
-        from . import incremental
-
-        self._lease_gen = incremental.acquire_lease(
-            self.index_dir, self._writer_id, incremental.LEASE_TTL_S
-        )
-        try:
-            return self._compact_locked()
-        finally:
-            incremental.release_lease(self.index_dir, self._writer_id)
 
     def _compact_locked(self) -> dict:
         """Re-apply the mega-bucket cap across all appends without
@@ -2055,27 +2124,17 @@ class CorpusWriter:
             self.spark, self.index_dir, fence=self._fence()
         )
         par = self.spark.sparkContext.defaultParallelism
-        for name, enabled in (
-            ("paragraphs", self.config.dedup_paragraphs),
-            ("exact_substr", self.config.dedup_exact_substr),
-        ):
-            if enabled and os.path.isdir(f"{self.index_dir}/{name}"):
-                self.spark.read.parquet(f"{self.index_dir}/{name}").select(
-                    "h"
-                ).distinct().repartition(par).write.mode("overwrite").parquet(
-                    f"{self.index_dir}/{name}.compact"
-                )
-                # Generation-pinned layer (r14): collapse the manifest
-                # INTO the stage so files + manifest swap together;
-                # older as_of pins then fail loudly (the VERDICT r13
-                # rewrite contract, extended to the pre-stage layers).
-                gens = incremental.snapshot_gens(f"{self.index_dir}/{name}")
-                if gens:
-                    incremental.collapse_snapshots(
-                        f"{self.index_dir}/{name}.compact", gens
-                    )
-                incremental._swap_staged(
-                    self.index_dir, name, fence=self._fence()
+        for name, (flag, _) in self._PRESTAGE.items():
+            d = f"{self.index_dir}/{name}"
+            if getattr(self.config, flag) and os.path.isdir(d):
+                # Generation-pinned layer (r14): the restage collapses
+                # its history, older as_of pins then fail loudly.
+                self._restage(
+                    name,
+                    self.spark.read.parquet(d)
+                    .select("h")
+                    .distinct()
+                    .repartition(par),
                 )
         if self.bm25_index:
             from .queries.retrieval import compact_bm25_index
@@ -2083,23 +2142,7 @@ class CorpusWriter:
             compact_bm25_index(
                 self.spark, self._bm25_dir(), fence=self._fence()
             )
-        if self.drift_monitor and os.path.isdir(self._drift_dir()):
-            # Collapse per-admit segments to ≤ drift_buckets rows —
-            # counts are additive, so the summed rewrite is
-            # content-equivalent under the reader's own SUM (pinned).
-            self.spark.read.parquet(self._drift_dir()).groupBy("b").agg(
-                F.sum("c").cast("long").alias("c")
-            ).coalesce(1).write.mode("overwrite").parquet(
-                f"{self._drift_dir()}.compact"
-            )
-            gens = incremental.snapshot_gens(self._drift_dir())
-            if gens:
-                incremental.collapse_snapshots(
-                    f"{self._drift_dir()}.compact", gens
-                )
-            incremental._swap_staged(
-                self.index_dir, "drift_ref", fence=self._fence()
-            )
+        self._compact_hist()
         return meta
 
     def release(self) -> None:
@@ -2112,7 +2155,7 @@ class CorpusWriter:
             self._bench_shingles = None
 
 
-class EmbeddingWriter:
+class EmbeddingWriter(_WriterBase):
     """Batch-at-a-time VECTOR admission — :class:`CorpusWriter`'s
     embedding-side twin for a corpus keyed by representation instead of
     text (near-duplicate images/audio under different encodings, captions
@@ -2150,6 +2193,28 @@ class EmbeddingWriter:
     id would store conflicting vectors under one key) — including at
     bootstrap, since stored ids become neighbor ids for every later
     batch."""
+
+    _ID_PREFIX = "ew"
+    _DATA_KEY = "store"
+    _DATA_ID = ("vec_id",)
+    _HIST = "cell_hist"
+    # Every per-admit generation-pinned layer, each keyed by its query
+    # key (the compaction clustering discipline — inverted file by
+    # cell, occupancy by (table, bucket), codes by their scan key). No
+    # layer here has tombstone-masked rows, so every vacuum is
+    # consolidation-only.
+    _LAYERS = (
+        Layer("lsh_signatures", ("bucket", "vec_id"), ("table_id",)),
+        Layer("ivf_assignment", ("cell", "vec_id")),
+        Layer("bucket_sizes", ("table_id", "bucket")),
+        Layer("pq_codes", ("vec_id",)),
+        Layer("ivfpq_codes", ("cell", "vec_id")),
+        Layer("cell_hist", ("b",)),
+    )
+
+    @property
+    def store_dir(self) -> str:
+        return self._data_dir
 
     def __init__(
         self,
@@ -2235,9 +2300,6 @@ class EmbeddingWriter:
         from .queries.dedup import COSINE_TAU
         from .queries.quantization import PQ_KS, PQ_M
 
-        self.spark = spark
-        self.store_dir = store_dir
-        self.index_dir = index_dir
         self.tau = COSINE_TAU if tau is None else tau
         self.auto_reconcile = auto_reconcile
         self.train_codebook = train_codebook
@@ -2256,25 +2318,10 @@ class EmbeddingWriter:
                 "quantization.write_pq_layer docstring)"
             )
         self.pq_opq = pq_opq
-        self.drift_monitor = drift_monitor
-        if drift_warn is not None and not drift_monitor:
-            raise ValueError(
-                "drift_warn requires drift_monitor=True (there is no "
-                "measurement to threshold otherwise)"
-            )
-        if (drift_refuse or drift_reconcile) and drift_warn is None:
-            raise ValueError(
-                "drift_refuse/drift_reconcile require drift_warn "
-                "thresholds"
-            )
-        if drift_refuse and drift_reconcile:
-            raise ValueError(
-                "drift_refuse and drift_reconcile are exclusive: a "
-                "refused batch is never admitted, so there is nothing "
-                "to retrain over"
-            )
-        self.drift_warn = drift_warn
-        self.drift_refuse = drift_refuse
+        super().__init__(
+            spark, store_dir, index_dir, drift_monitor, drift_warn,
+            drift_refuse, drift_reconcile,
+        )
         self.drift_reconcile = drift_reconcile
         # Frozen-books cache, keyed like the IVF codebook cache below.
         self._pq_books = None
@@ -2289,13 +2336,6 @@ class EmbeddingWriter:
         # cached copy still exact.
         self._crows: list | None = None
         self._crows_key: tuple | None = None
-        import os as _os
-        import uuid as _uuid
-
-        self._writer_id = "ew-{}-{}".format(
-            _os.getpid(), _uuid.uuid4().hex[:12]
-        )
-        self._lease_gen = 0  # set by every public mutating entry
 
     def _build_codebook(self):
         """The codebook for an index BUILD: a freshly trained k-means‖
@@ -2346,180 +2386,26 @@ class EmbeddingWriter:
             self.index_dir
         )
 
-    def _store_exists(self) -> bool:
-        return _parquet_dir_committed(self.store_dir)
-
-    def _fence(self) -> tuple[str, str, int]:
-        """`CorpusWriter._fence`'s twin — the ANN writer's fencing
-        token (VERDICT r11 #5)."""
-        return (self.index_dir, self._writer_id, self._lease_gen)
-
     def store(self, as_of: int | None = None) -> DataFrame:
         """The admitted vectors so far (vec_id, label, embedding).
         ``as_of``: a 1-based admission-snapshot generation (the
         ``snapshot`` stats field) — read exactly the files the first
         ``as_of`` recorded admissions committed
         (`incremental.snapshot_files`, zero jobs)."""
-        from . import incremental
-
-        incremental.recover_data_dir(self.store_dir)
-        if as_of is None:
-            return self.spark.read.parquet(self.store_dir)
-        files = incremental.snapshot_files(self.store_dir, as_of)
-        # Same listing-scope discipline as CorpusWriter.corpus (r18).
-        with incremental._local_listing_scope(self.spark, files):
-            return self.spark.read.parquet(*files)
-
-    def snapshots(self) -> int:
-        """Recorded admission-snapshot generations (0 for a store
-        written before snapshots existed) — valid ``as_of`` values are
-        1..this."""
-        from . import incremental
-
-        return incremental.snapshot_gens(self.store_dir)
+        return self._data(as_of)
 
     def compact_store(self) -> dict:
         """`CorpusWriter.compact_corpus`'s twin for the vector store:
         per-generation vec_id-sorted rewrite + manifest rewrite —
         ``store(as_of=g)`` bit-equal before/after for every g; staged
         swap, healed at every read; under the writer lease."""
-        from . import incremental
-
-        self._lease_gen = incremental.acquire_lease(
-            self.index_dir, self._writer_id, incremental.LEASE_TTL_S
-        )
-        try:
-            return incremental.compact_data_snapshots(
-                self.spark,
-                self.store_dir,
-                ("vec_id",),
-                fence=self._fence(),
-            )
-        finally:
-            incremental.release_lease(self.index_dir, self._writer_id)
-
-    def prune_snapshots(self, before_gen: int) -> dict:
-        """`CorpusWriter.prune_snapshots`'s twin for the vector-store
-        family: the store's data-of-record manifest and every stored
-        ANN layer's manifest collapse generations ``< before_gen``
-        together (lockstep numbering survives; layers lagging the
-        horizon are skipped and heal at the next admit). Driver-side
-        only, idempotent, under the writer lease."""
-        import os
-
-        from . import incremental
-
-        self._lease_gen = incremental.acquire_lease(
-            self.index_dir, self._writer_id, incremental.LEASE_TTL_S
-        )
-        try:
-            return self._prune_snapshots_locked(before_gen)
-        finally:
-            incremental.release_lease(self.index_dir, self._writer_id)
-
-    def _prune_snapshots_locked(self, before_gen: int) -> dict:
-        import os
-
-        from . import incremental
-
-        incremental.verify_lease(*self._fence())
-        incremental.recover_data_dir(self.store_dir, locked=True)
-        out = {
-            "store": incremental.prune_snapshots(
-                self.store_dir, before_gen
-            )
-        }
-        for name in (
-            "lsh_signatures",
-            "ivf_assignment",
-            "bucket_sizes",
-            "pq_codes",
-            "ivfpq_codes",
-            "cell_hist",
-        ):
-            d = f"{self.index_dir}/{name}"
-            if (
-                os.path.isdir(d)
-                and incremental.snapshot_gens(d) >= before_gen
-            ):
-                out[name] = incremental.prune_snapshots(d, before_gen)
-        return out
-
-    def vacuum(self, before_gen: int) -> dict:
-        """`CorpusWriter.vacuum`'s twin for the vector store: prune the
-        family to ``before_gen`` (idempotent), then physically rewrite
-        each layer's merged base generation into query-key-sorted
-        target-sized files, dropping the superseded pre-horizon small
-        files at the staged swap — ``store(as_of >= before_gen)`` and
-        every from-index ``as_of >= before_gen`` read bit-equal
-        before/after, older pins loudly refused, crash self-heals.
-        Covers the store plus every derived layer, each sorted by its
-        query key (the compaction clustering discipline — inverted
-        file by cell, occupancy by (table, bucket), codes by their
-        scan key); the hive-partitioned ``lsh_signatures`` rewrite
-        re-emits its ``table_id=`` dirs (``partition_by`` — the
-        manifest keeps partition-dir-relative names, so ``basePath``
-        as-of readers still recover the column). No layer here has
-        tombstone-masked rows, so every vacuum is consolidation-only
-        (``dead=None``)."""
-        from . import incremental
-
-        self._lease_gen = incremental.acquire_lease(
-            self.index_dir, self._writer_id, incremental.LEASE_TTL_S
-        )
-        try:
-            out: dict = self._prune_snapshots_locked(before_gen)
-            out["store"] = incremental.vacuum_data_snapshots(
-                self.spark,
-                self.store_dir,
-                before_gen,
-                ("vec_id",),
-                fence=self._fence(),
-            )
-            import os
-
-            for name, order, parts in (
-                ("ivf_assignment", ("cell", "vec_id"), ()),
-                ("bucket_sizes", ("table_id", "bucket"), ()),
-                ("pq_codes", ("vec_id",), ()),
-                ("ivfpq_codes", ("cell", "vec_id"), ()),
-                ("lsh_signatures", ("bucket", "vec_id"), ("table_id",)),
-                # Drift layer (ADVICE r15): per-admit (b, c) segments —
-                # mirrors CorpusWriter.vacuum's drift_ref entry.
-                ("cell_hist", ("b",), ()),
-            ):
-                d = f"{self.index_dir}/{name}"
-                if (
-                    os.path.isdir(d)
-                    and incremental.snapshot_gens(d) >= before_gen
-                ):
-                    out[name] = incremental.vacuum_data_snapshots(
-                        self.spark,
-                        d,
-                        before_gen,
-                        order,
-                        fence=self._fence(),
-                        partition_by=parts,
-                    )
-            return out
-        finally:
-            incremental.release_lease(self.index_dir, self._writer_id)
+        return self._compact_data()
 
     def export_store(self, as_of: int, dest_dir: str) -> dict:
         """Publish the vector store as of generation ``as_of`` as a
         standalone dir (`incremental.export_snapshot`), under the
         writer lease — `CorpusWriter.export_corpus`'s twin."""
-        from . import incremental
-
-        self._lease_gen = incremental.acquire_lease(
-            self.index_dir, self._writer_id, incremental.LEASE_TTL_S
-        )
-        try:
-            return incremental.export_snapshot(
-                self.store_dir, as_of, dest_dir
-            )
-        finally:
-            incremental.release_lease(self.index_dir, self._writer_id)
+        return self._export(as_of, dest_dir)
 
     def _in_batch_rejects(
         self, batch_emb: DataFrame, sig: DataFrame, cap: int, b: int
@@ -2560,15 +2446,7 @@ class EmbeddingWriter:
         single-writer lease — `CorpusWriter.admit`'s contract: a
         second concurrent writer raises `incremental.LeaseHeld`; a
         crashed holder is taken over after `incremental.LEASE_TTL_S`."""
-        from . import incremental
-
-        self._lease_gen = incremental.acquire_lease(
-            self.index_dir, self._writer_id, incremental.LEASE_TTL_S
-        )
-        try:
-            return self._admit_locked(batch_emb)
-        finally:
-            incremental.release_lease(self.index_dir, self._writer_id)
+        return self._leased(self._admit_locked, batch_emb)
 
     def _admit_locked(self, batch_emb: DataFrame) -> dict[str, int]:
         """Run one (vec_id, label, embedding) batch through in-batch
@@ -2589,7 +2467,9 @@ class EmbeddingWriter:
 
         # locked=True: admit entry under the lease (see CorpusWriter).
         incremental.recover_data_dir(self.store_dir, locked=True)
-        if not self._bootstrapped() and self._store_exists():
+        if not self._bootstrapped() and _parquet_dir_committed(
+            self.store_dir
+        ):
             self._reconcile_locked()
         par = self.spark.sparkContext.defaultParallelism
         if not self._bootstrapped():
@@ -2644,12 +2524,7 @@ class EmbeddingWriter:
                 # Bootstrap segment 0 = the just-built inverted file's
                 # occupancy; no drift stats (no pre-admit reference).
                 self._ensure_crows(_read_ann_meta(self.index_dir))
-                self._write_cell_hist(
-                    self._stored_cell_source(), "overwrite"
-                )
-                incremental.record_aligned_snapshot(
-                    self._cell_hist_dir(), stats["snapshot"]
-                )
+                self._rebuild_hist(stats["snapshot"])
             return stats
 
         meta = _read_ann_meta(self.index_dir)
@@ -2759,17 +2634,8 @@ class EmbeddingWriter:
                 # corpus). The batch side is the FULL arriving batch —
                 # a drift alarm should fire on what arrived, not be
                 # masked by how much of it was rejected.
-                from .queries.text import corpus_drift_from_hists
-
                 self._ensure_crows(meta)
-                drow = corpus_drift_from_hists(
-                    self.spark,
-                    self._cell_hist_or_heal(),
-                    self._cell_hist_of(batch_emb),
-                    len(self._crows),
-                ).collect()[0]
-                stats["drift_kl_fix"] = int(drow["kl_fix"])
-                stats["drift_tv_fix"] = int(drow["tv_fix"])
+                stats.update(self._drift(self._hist_or_heal(), batch_emb))
                 # Threshold policy BEFORE any state change — a refusal
                 # rolls back nothing (VERDICT r11 #3).
                 drift_hit = _apply_drift_policy(
@@ -2836,10 +2702,7 @@ class EmbeddingWriter:
                 # contract as the text writer's drift_ref — and the
                 # same generation pin (r14): drift_refuse makes this
                 # layer admission-affecting state.
-                self._extend_cell_hist(novel)
-                incremental.record_aligned_snapshot(
-                    self._cell_hist_dir(), stats["snapshot"]
-                )
+                self._extend_hist(novel, stats["snapshot"])
             if drift_hit and self.drift_reconcile:
                 # The retrain trigger (VERDICT r11 #8 stretch): the
                 # batch IS admitted (all layers extended above — the
@@ -2858,12 +2721,6 @@ class EmbeddingWriter:
                 if ck is not None:
                     release_local_checkpoint(ck)
 
-    def _cell_hist_dir(self) -> str:
-        return f"{self.index_dir}/cell_hist"
-
-    def _cell_hist_marker(self) -> str:
-        return f"{self.index_dir}/cell_hist.inprogress"
-
     def _cell_map(self) -> DataFrame:
         """(cell, b): the frozen codebook's cells mapped to the dense
         [0, n_cells) bucket domain `corpus_drift_from_hists` ranges
@@ -2873,64 +2730,40 @@ class EmbeddingWriter:
             [(c, i) for i, c in enumerate(cells)], "cell long, b long"
         )
 
-    def _cell_hist_of(self, emb: DataFrame) -> DataFrame:
+    def _cell_counts(self, assigned: DataFrame) -> DataFrame:
+        """(b, c) from rk == 1 (…, cell, rk) rows: one count per dense
+        cell bucket."""
+        return (
+            assigned.filter(F.col("rk") == 1)
+            .join(self._cell_map(), "cell")
+            .groupBy("b")
+            .agg(F.count("*").cast("long").alias("c"))
+        )
+
+    def _hist_of(self, emb: DataFrame) -> DataFrame:
         """(b, c): the IVF-cell histogram of ``emb``'s vectors under
         the FROZEN stored codebook — the vector-side analogue of the
         text writer's hashed-unigram histogram (the embedding
         distribution collapsed to its coarse-quantizer occupancy)."""
         from .queries.similarity import _ivf_ranked_assignment
 
-        ranked = _ivf_ranked_assignment(
-            self.spark, emb.select("vec_id", "embedding"), crows=self._crows
-        )
-        return (
-            ranked.filter(F.col("rk") == 1)
-            .join(self._cell_map(), "cell")
-            .groupBy("b")
-            .agg(F.count("*").cast("long").alias("c"))
+        return self._cell_counts(
+            _ivf_ranked_assignment(
+                self.spark, emb.select("vec_id", "embedding"), crows=self._crows
+            )
         )
 
-    def _stored_cell_source(self) -> DataFrame:
+    def _hist_source(self) -> DataFrame:
         """The inverted file's rk == 1 rows mapped to the dense domain —
-        the recount source the layer must always sum to (pinned)."""
-        return (
+        the recount source the layer must always sum to (pinned); at
+        every heal call site it is the pre-admit corpus (the extend
+        runs later)."""
+        return self._cell_counts(
             self.spark.read.parquet(f"{self.index_dir}/ivf_assignment")
-            .filter(F.col("rk") == 1)
-            .join(self._cell_map(), "cell")
-            .groupBy("b")
-            .agg(F.count("*").cast("long").alias("c"))
         )
 
-    def _write_cell_hist(self, hist: DataFrame, mode: str) -> None:
-        hist.write.mode(mode).parquet(self._cell_hist_dir())
-
-    def _cell_hist_or_heal(self) -> DataFrame:
-        """Stored per-segment (b, c) layer; heals exactly like the text
-        writer's drift_ref — interrupted compact swaps forward-roll, a
-        missing/uncommitted/marker-bracketed layer rebuilds from the
-        stored inverted file (which at every call site is the pre-admit
-        corpus — the extend runs later)."""
-        import os
-
-        from . import incremental
-
-        incremental._recover_staged(
-            self.index_dir, ("cell_hist",), discard_stage=False
-        )
-        if os.path.exists(
-            self._cell_hist_marker()
-        ) or not _parquet_dir_committed(self._cell_hist_dir()):
-            self._write_cell_hist(self._stored_cell_source(), "overwrite")
-            if os.path.exists(self._cell_hist_marker()):
-                os.remove(self._cell_hist_marker())
-        return self.spark.read.parquet(self._cell_hist_dir())
-
-    def _extend_cell_hist(self, novel: DataFrame) -> None:
-        import os
-
-        open(self._cell_hist_marker(), "w").close()
-        self._write_cell_hist(self._cell_hist_of(novel), "append")
-        os.remove(self._cell_hist_marker())
+    def _hist_width(self) -> int:
+        return len(self._crows)
 
     def drift_stats(self, emb: DataFrame, as_of: int | None = None) -> dict:
         """KL/TV of ``emb``'s IVF-cell distribution (under the FROZEN
@@ -2941,39 +2774,11 @@ class EmbeddingWriter:
         codebook's cell domain, because a reconcile retrain collapses
         the layer's history along with the domain. Returns
         {"drift_kl_fix", "drift_tv_fix"}."""
-        from . import incremental
         from .queries.similarity import _read_ann_meta
-        from .queries.text import corpus_drift_from_hists
 
-        if not self.drift_monitor:
-            raise ValueError(
-                "this EmbeddingWriter was constructed without "
-                "drift_monitor=True — there is no stored occupancy "
-                "layer to measure against"
-            )
-        self._ensure_crows(_read_ann_meta(self.index_dir))
-        if as_of is None:
-            ref = self._cell_hist_or_heal()
-        else:
-            incremental._recover_staged(
-                self.index_dir, ("cell_hist",), discard_stage=False
-            )
-            from .queries.text import DRIFT_HIST_SCHEMA
-
-            ref = incremental.snapshot_read(
-                self.spark, self._cell_hist_dir(), as_of,
-                schema=DRIFT_HIST_SCHEMA,
-            )
-        row = corpus_drift_from_hists(
-            self.spark,
-            ref,
-            self._cell_hist_of(emb.select("vec_id", "embedding")),
-            len(self._crows),
-        ).collect()[0]
-        return {
-            "drift_kl_fix": int(row["kl_fix"]),
-            "drift_tv_fix": int(row["tv_fix"]),
-        }
+        if self.drift_monitor:
+            self._ensure_crows(_read_ann_meta(self.index_dir))
+        return self._drift_stats(emb, as_of)
 
     def _ensure_crows(self, meta: dict) -> None:
         crows_key = (meta["n"], meta["b"])
@@ -3148,19 +2953,6 @@ class EmbeddingWriter:
             stacklevel=3,
         )
 
-    def reconcile(self) -> dict:
-        """Public entry: :meth:`_reconcile_locked` under the
-        single-writer lease (the :meth:`admit` contract)."""
-        from . import incremental
-
-        self._lease_gen = incremental.acquire_lease(
-            self.index_dir, self._writer_id, incremental.LEASE_TTL_S
-        )
-        try:
-            return self._reconcile_locked()
-        finally:
-            incremental.release_lease(self.index_dir, self._writer_id)
-
     def _reconcile_locked(self) -> dict:
         """Rebuild the ANN index from the store as currently written —
         the recovery path for a crash inside :meth:`admit`'s
@@ -3170,7 +2962,7 @@ class EmbeddingWriter:
         the corpus far from the frozen centroids
         (`similarity.ann_index_drift` past `ANN_DRIFT_FACTOR`; see
         ``auto_reconcile``)."""
-        from .incremental import _dir_rows
+        from . import incremental
         from .queries.similarity import write_ann_index
 
         # The rebuild trains FRESH codebooks — drop the cached ones.
@@ -3184,7 +2976,7 @@ class EmbeddingWriter:
             self.store_dir,
             self.index_dir,
             emb=self.store(),
-            n=_dir_rows(self.store_dir),
+            n=incremental._dir_rows(self.store_dir),
             codebook=self._build_codebook(),
         )
         if self.pq_layer:
@@ -3193,49 +2985,17 @@ class EmbeddingWriter:
         # the manifests with the dirs); numbering stays aligned with
         # the store, older as_of pins fail loudly (VERDICT r13
         # contract).
-        from . import incremental
-
-        self._record_ann_gens(
-            incremental.snapshot_gens(self.store_dir),
-            reason=(
-                "layer history collapsed by reconcile (full rebuild "
-                "from the data of record)"
-            ),
-        )
+        gen = incremental.snapshot_gens(self.store_dir)
+        self._record_ann_gens(gen, reason=_REBUILD_REASON)
         if self.drift_monitor:
             # A rebuild retrains the codebook — the cell DOMAIN itself
             # changes, so the layer rebuilds wholesale from the fresh
             # inverted file (also the staleness-heal / late-enablement
             # path). History collapses WITH the domain: any servable
             # as_of is always within one codebook's cell domain.
-            import os
-
             self._ensure_crows(meta)
-            self._write_cell_hist(self._stored_cell_source(), "overwrite")
-            incremental.record_aligned_snapshot(
-                self._cell_hist_dir(),
-                incremental.snapshot_gens(self.store_dir),
-                reason=(
-                    "layer history collapsed by reconcile (full "
-                    "rebuild from the data of record)"
-                ),
-            )
-            if os.path.exists(self._cell_hist_marker()):
-                os.remove(self._cell_hist_marker())
+            self._rebuild_hist(gen, _REBUILD_REASON)
         return meta
-
-    def compact(self) -> dict:
-        """Public entry: :meth:`_compact_locked` under the
-        single-writer lease (the :meth:`admit` contract)."""
-        from . import incremental
-
-        self._lease_gen = incremental.acquire_lease(
-            self.index_dir, self._writer_id, incremental.LEASE_TTL_S
-        )
-        try:
-            return self._compact_locked()
-        finally:
-            incremental.release_lease(self.index_dir, self._writer_id)
 
     def _compact_locked(self) -> dict:
         """Collapse the ANN index's per-admit append segments
@@ -3263,26 +3023,7 @@ class EmbeddingWriter:
                 qz.compact_pq_codes(
                     self.spark, self.index_dir, fence=self._fence()
                 )
-        import os
-
-        if self.drift_monitor and os.path.isdir(self._cell_hist_dir()):
-            from . import incremental
-
-            self.spark.read.parquet(self._cell_hist_dir()).groupBy(
-                "b"
-            ).agg(F.sum("c").cast("long").alias("c")).coalesce(
-                1
-            ).write.mode("overwrite").parquet(
-                f"{self._cell_hist_dir()}.compact"
-            )
-            gens = incremental.snapshot_gens(self._cell_hist_dir())
-            if gens:
-                incremental.collapse_snapshots(
-                    f"{self._cell_hist_dir()}.compact", gens
-                )
-            incremental._swap_staged(
-                self.index_dir, "cell_hist", fence=self._fence()
-            )
+        self._compact_hist()
         return meta
 
 

@@ -551,7 +551,7 @@ def test_prestage_layers_replay_as_of(spark, tmp_path):
     with pytest.raises(ValueError, match="not servable"):
         w.pre_stage_batch(probe, as_of=1).collect()
     with pytest.raises(ValueError, match="not servable"):
-        w._stored_substr(as_of=1)
+        w._stored_digests("exact_substr", as_of=1)
     staged = w.pre_stage_batch(probe, as_of=2)
     assert _rows(staged.select("doc_id", "text")) == cap_text[2]
     # reconcile() (full rebuild) keeps numbering, collapses history too.

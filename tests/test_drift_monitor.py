@@ -64,7 +64,7 @@ def run(spark, batches, tmp_path_factory):
 def test_bootstrap_has_layer_but_no_drift_stats(run):
     w, s1, _, _ = run
     assert "drift_kl_fix" not in s1 and "drift_tv_fix" not in s1
-    assert os.path.isdir(w._drift_dir())
+    assert os.path.isdir(w._hist_dir())
 
 
 def test_admit_drift_equals_standalone_corpus_drift(spark, batches, run):
@@ -85,7 +85,7 @@ def test_layer_sum_of_segments_equals_recount(spark, run):
     w, _, _, _ = run
     stored = sorted(
         tuple(r)
-        for r in spark.read.parquet(w._drift_dir())
+        for r in spark.read.parquet(w._hist_dir())
         .groupBy("b")
         .agg(F.sum("c").cast("long").alias("c"))
         .collect()
@@ -115,13 +115,13 @@ def test_compact_is_query_invisible(spark, run):
     w, _, _, _ = run
     before = sorted(
         tuple(r)
-        for r in spark.read.parquet(w._drift_dir())
+        for r in spark.read.parquet(w._hist_dir())
         .groupBy("b")
         .agg(F.sum("c").cast("long").alias("c"))
         .collect()
     )
     w.compact()
-    after_df = spark.read.parquet(w._drift_dir())
+    after_df = spark.read.parquet(w._hist_dir())
     after = sorted(
         tuple(r)
         for r in after_df.groupBy("b")
@@ -138,9 +138,9 @@ def test_marker_crash_heals_by_rebuild(spark, batches, run):
     the layer from the corpus instead of double-counting — the summed
     layer still equals the recount afterwards."""
     w, _, _, _ = run
-    open(w._drift_marker(), "w").close()
-    hist = w._drift_hist_or_heal()
-    assert not os.path.exists(w._drift_marker())
+    open(w._hist_marker(), "w").close()
+    hist = w._hist_or_heal()
+    assert not os.path.exists(w._hist_marker())
     stored = sorted(
         tuple(r)
         for r in hist.groupBy("b")
@@ -173,7 +173,7 @@ def test_late_enablement_heals_from_corpus(spark, batches, tmp_path_factory):
     assert "drift_kl_fix" in s1
     stored = sorted(
         tuple(r)
-        for r in spark.read.parquet(w1._drift_dir())
+        for r in spark.read.parquet(w1._hist_dir())
         .groupBy("b")
         .agg(F.sum("c").cast("long").alias("c"))
         .collect()
@@ -203,7 +203,7 @@ def erun(spark, tmp_path_factory):
     s1 = w.admit(b1)
     ref = sorted(
         tuple(r)
-        for r in w._cell_hist_or_heal()
+        for r in w._hist_or_heal()
         .groupBy("b")
         .agg(F.sum("c").cast("long").alias("c"))
         .collect()
@@ -215,7 +215,7 @@ def erun(spark, tmp_path_factory):
 def test_embedding_bootstrap_layer_no_stats(erun):
     w, s1, _, _, _ = erun
     assert "drift_kl_fix" not in s1
-    assert os.path.isdir(w._cell_hist_dir())
+    assert os.path.isdir(w._hist_dir())
 
 
 def test_embedding_admit_drift_equals_library(spark, erun):
@@ -225,7 +225,7 @@ def test_embedding_admit_drift_equals_library(spark, erun):
     assert "drift_kl_fix" in s2 and "drift_tv_fix" in s2
     ref_df = spark.createDataFrame(list(ref), "b long, c long")
     want = corpus_drift_from_hists(
-        spark, ref_df, w._cell_hist_of(b2), len(w._crows)
+        spark, ref_df, w._hist_of(b2), len(w._crows)
     ).collect()[0]
     assert s2["drift_kl_fix"] == int(want["kl_fix"])
     assert s2["drift_tv_fix"] == int(want["tv_fix"])
@@ -235,12 +235,12 @@ def test_embedding_layer_sum_equals_inverted_file(spark, erun):
     w, _, _, _, _ = erun
     stored = sorted(
         tuple(r)
-        for r in spark.read.parquet(w._cell_hist_dir())
+        for r in spark.read.parquet(w._hist_dir())
         .groupBy("b")
         .agg(F.sum("c").cast("long").alias("c"))
         .collect()
     )
-    want = sorted(tuple(r) for r in w._stored_cell_source().collect())
+    want = sorted(tuple(r) for r in w._hist_source().collect())
     assert stored == want
 
 
@@ -261,13 +261,13 @@ def test_embedding_compact_and_marker_heal(spark, erun):
     w, _, _, _, _ = erun
     before = sorted(
         tuple(r)
-        for r in spark.read.parquet(w._cell_hist_dir())
+        for r in spark.read.parquet(w._hist_dir())
         .groupBy("b")
         .agg(F.sum("c").cast("long").alias("c"))
         .collect()
     )
     w.compact()
-    after_df = spark.read.parquet(w._cell_hist_dir())
+    after_df = spark.read.parquet(w._hist_dir())
     after = sorted(
         tuple(r)
         for r in after_df.groupBy("b")
@@ -277,9 +277,9 @@ def test_embedding_compact_and_marker_heal(spark, erun):
     assert before == after
     assert after_df.count() == after_df.select("b").distinct().count()
     # marker crash -> heal rebuilds ≡ the inverted-file recount
-    open(w._cell_hist_marker(), "w").close()
-    hist = w._cell_hist_or_heal()
-    assert not os.path.exists(w._cell_hist_marker())
+    open(w._hist_marker(), "w").close()
+    hist = w._hist_or_heal()
+    assert not os.path.exists(w._hist_marker())
     healed = sorted(
         tuple(r)
         for r in hist.groupBy("b")
@@ -338,7 +338,7 @@ def test_drift_refuse_rejects_before_any_state_change(
     before = (
         _dir_rows(w.corpus_dir),
         _dir_rows(f"{w.index_dir}/digests"),
-        _dir_rows(w._drift_dir()),
+        _dir_rows(w._hist_dir()),
     )
     with pytest.raises(DriftExceeded) as ei:
         w.admit(batches[1])
@@ -346,7 +346,7 @@ def test_drift_refuse_rejects_before_any_state_change(
     after = (
         _dir_rows(w.corpus_dir),
         _dir_rows(f"{w.index_dir}/digests"),
-        _dir_rows(w._drift_dir()),
+        _dir_rows(w._hist_dir()),
     )
     assert after == before
     # the lease was released on the refusal (the finally contract)
@@ -419,7 +419,7 @@ def test_drift_buckets_mismatch_rebuilds_under_new_domain(
     assert w64._stored_drift_buckets() == 64
     stored = sorted(
         tuple(r)
-        for r in spark.read.parquet(w64._drift_dir())
+        for r in spark.read.parquet(w64._hist_dir())
         .groupBy("b")
         .agg(F.sum("c").cast("long").alias("c"))
         .collect()
@@ -491,12 +491,12 @@ def test_embedding_drift_reconcile_retrains_codebook(
     # recount over the NEW codebook's domain
     stored = sorted(
         tuple(r)
-        for r in spark.read.parquet(w._cell_hist_dir())
+        for r in spark.read.parquet(w._hist_dir())
         .groupBy("b")
         .agg(F.sum("c").cast("long").alias("c"))
         .collect()
     )
-    want = sorted(tuple(r) for r in w._stored_cell_source().collect())
+    want = sorted(tuple(r) for r in w._hist_source().collect())
     assert stored == want
     # the guardrail's point: the same shift now measures LESS drift
     s3 = w.admit(neg(F.col("vec_id") % 4 == 3, 6_000_000))
@@ -609,12 +609,12 @@ def test_stream_drift_trips_policy_and_retrain_rearms_guardrail(
     # a fresh recount over the NEW codebook's inverted file
     stored = sorted(
         tuple(r)
-        for r in spark.read.parquet(w._cell_hist_dir())
+        for r in spark.read.parquet(w._hist_dir())
         .groupBy("b")
         .agg(F.sum("c").cast("long").alias("c"))
         .collect()
     )
-    want = sorted(tuple(r) for r in w._stored_cell_source().collect())
+    want = sorted(tuple(r) for r in w._hist_source().collect())
     assert stored == want
 
 

@@ -456,3 +456,51 @@ def test_embedding_writer_vacuum(spark, tmp_path):
         w.store(as_of=1).count()
     s = w.admit(emb.filter(F.col("vec_id") % 3 == 0))
     assert s["snapshot"] == 4
+
+
+def _manifest_dirs(index_dir: str) -> set[str]:
+    """Basenames of the dirs under ``index_dir`` that hold a snapshot
+    manifest — the layers a writer generation-pins."""
+    return {
+        os.path.basename(root)
+        for root, _, files in os.walk(index_dir)
+        if incremental.SNAPSHOT_NAME in files
+    }
+
+
+@pytest.mark.parametrize("kind", ["text", "embedding"])
+def test_layer_table_covers_every_generation_pinned_layer(
+    spark, tmp_path, kind
+):
+    """Each writer's layer table is the one list prune and vacuum walk,
+    so it must name every generation-pinned layer: with every optional
+    layer on, the dirs holding a manifest are exactly the layer keys of
+    prune_snapshots(1). A layer added later but left out of the table
+    (never pruned, never vacuumed) fails here. Prune is driver-side:
+    zero Spark jobs. One admit: the bootstrap records every layer's
+    manifest, and a later admit adds no layer dir."""
+    from kinesis_iterator_spark.pipeline import CurationConfig
+
+    if kind == "text":
+        batch = load_table(spark, SF, "documents").select(
+            "doc_id", "lang", "source", "text"
+        )
+        key, data_key = "doc_id", "corpus"
+        w = CorpusWriter(
+            spark, f"{tmp_path}/corpus", f"{tmp_path}/index",
+            CurationConfig(dedup_paragraphs=True, dedup_exact_substr=True),
+            bm25_index=True, drift_monitor=True,
+        )
+    else:
+        batch = load_table(spark, SF, "embeddings")
+        key, data_key = "vec_id", "store"
+        w = EmbeddingWriter(
+            spark, f"{tmp_path}/store", f"{tmp_path}/index",
+            pq_layer=True, pq_residual=True, pq_iters=1, drift_monitor=True,
+        )
+    w.admit(batch.filter(F.col(key) % 10 == 0))
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs = sched.nextJobId()
+    out = w.prune_snapshots(1)
+    assert sched.nextJobId() == jobs
+    assert set(out) - {data_key} == _manifest_dirs(w.index_dir)

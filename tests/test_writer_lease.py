@@ -218,6 +218,44 @@ def test_corpus_writer_fenced_compact_leaves_live_index(
     assert _dir_rows(f"{w.index_dir}/bands") == bands_before
 
 
+def test_corpus_writer_fenced_auto_compact_leaves_live_index(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The in-admit compaction (``auto_compact``) is a staged swap
+    under the lease like `compact`: a writer taken over after its index
+    writes raises LeaseLost at the swap instead of swapping bands under
+    the new holder, and the live band relation is untouched."""
+    from kinesis_iterator_spark.incremental import LeaseLost, _dir_rows
+
+    doc = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "lang", "source", "text"
+    )
+    w = CorpusWriter(
+        spark, str(tmp_path / "corpus"), str(tmp_path / "index"),
+        CurationConfig(), auto_compact=True,
+    )
+    w.admit(doc.filter(F.col("doc_id") % 10 == 0))
+    bands = f"{w.index_dir}/bands"
+    live = {}
+
+    def drifted(index_dir, meta=None):
+        # The admit's index writes are done: record the live bands,
+        # then stall past the TTL and let a thief take the lease.
+        live["files"] = sorted(os.listdir(bands))
+        live["rows"] = _dir_rows(bands)
+        old = time.time() - incremental.LEASE_TTL_S - 10
+        os.utime(_lease_path(index_dir), (old, old))
+        acquire_lease(index_dir, "thief")
+        return incremental.COMPACT_DRIFT_FACTOR + 1
+
+    monkeypatch.setattr(incremental, "index_drift", drifted)
+    with pytest.raises(LeaseLost):
+        w.admit(doc.filter(F.col("doc_id") % 10 == 1))
+    assert live, "the admit never reached its auto_compact check"
+    assert sorted(os.listdir(bands)) == live["files"]
+    assert _dir_rows(bands) == live["rows"]
+
+
 def test_embedding_writer_fenced_admit_fails_before_append(
     spark, sf_dir, tmp_path, monkeypatch
 ):
