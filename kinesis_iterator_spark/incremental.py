@@ -72,6 +72,23 @@ def _current_meta() -> dict:
     }
 
 
+def _inheriting(fn):
+    """``fn`` wrapped to run on another thread with THIS thread's Spark
+    local properties (job group, scheduler pool) and session tags —
+    plain threads start without them under PySpark's pinned-thread
+    mode. Captured at wrap time; ``fn`` itself when no Spark context
+    is running."""
+    from pyspark import SparkContext, inheritable_thread_target
+    from pyspark.sql import SparkSession
+
+    if SparkContext._active_spark_context is None:
+        return fn
+    session = (
+        SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
+    )
+    return inheritable_thread_target(session)(fn)
+
+
 def _concurrently(*thunks):
     """Run independent Spark ACTIONS in parallel driver threads and
     return their results in order. The admit loops are job-count-
@@ -83,13 +100,15 @@ def _concurrently(*thunks):
     (e.g. the corpus append must commit before any index write starts —
     crash-ordering contracts survive because the parallel group is
     all-index-side). Any thunk's exception propagates (first one wins)
-    after all threads finish."""
+    after all threads finish. Each thread runs with the caller's Spark
+    local properties and session tags (`_inheriting`), so a job group
+    or scheduler pool set by the caller reaches the thunks' jobs."""
     from concurrent.futures import ThreadPoolExecutor
 
     if len(thunks) == 1:
         return [thunks[0]()]
     with ThreadPoolExecutor(max_workers=len(thunks)) as ex:
-        futures = [ex.submit(t) for t in thunks]
+        futures = [ex.submit(_inheriting(t)) for t in thunks]
         # Collect everything before raising so a failure in one write
         # doesn't leave another mid-flight when the caller handles it.
         results, first_err = [], None

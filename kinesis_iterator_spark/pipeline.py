@@ -40,6 +40,7 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass
 from functools import reduce
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -100,7 +101,7 @@ def _apply_drift_policy(
             )
         import warnings
 
-        warnings.warn(msg, stacklevel=4)
+        warnings.warn(msg, stacklevel=5)
     return exceeded
 
 
@@ -682,12 +683,14 @@ class Layer:
     """One generation-pinned per-admit layer of a writer's index:
     ``path`` under ``index_dir``, the ``order_cols`` a vacuum rewrite
     clusters it by (its query key, so point scans stay parquet-min/max
-    pruned), and the hive ``partition_by`` columns its files sit
-    under."""
+    pruned), the hive ``partition_by`` columns its files sit under, and
+    ``on(writer)`` — whether that writer maintains (and so records) the
+    layer."""
 
     path: str
     order_cols: tuple[str, ...]
     partition_by: tuple[str, ...] = ()
+    on: Callable[[Any], bool] = lambda w: True
 
 
 # Stamped on collapse tombstones when reconcile rebuilt a layer.
@@ -711,14 +714,17 @@ class _WriterBase:
     - ``_DATA_KEY`` / ``_DATA_ID`` — the data of record's stats key and
       its sort key;
     - ``_LAYERS`` — the per-admit :class:`Layer` table, the ONE list
-      :meth:`prune_snapshots` and :meth:`vacuum` walk (in order);
+      :meth:`prune_snapshots`, :meth:`vacuum` and the recording walk
+      :meth:`_record_layers` go through (in order);
     - ``_HIST`` — the drift-histogram layer's dir name, plus three
       methods: ``_hist_of(frame)`` (a batch's (b, c) histogram),
       ``_hist_source()`` (the rebuild source) and ``_hist_width()``
       (the bucket domain size);
 
-    and the lease-free bodies ``_reconcile_locked`` /
-    ``_compact_locked``. Every public mutating entry is one call to
+    and the lease-free bodies ``_rebuild_layers`` (every derived layer
+    rewritten from the data of record — what :meth:`reconcile` and both
+    bootstraps run) / ``_compact_locked``. Every public mutating entry
+    is one call to
     :meth:`_leased`; the ``_locked`` bodies never take the lease, so a
     leased entry can call another's body (vacuum → prune, admit →
     reconcile) without the inner release dropping the outer lease (the
@@ -845,6 +851,96 @@ class _WriterBase:
         )
 
     # -- maintenance over the layer table --------------------------------
+
+    # -- the generation protocol -----------------------------------------
+
+    def _commit(
+        self, stats: dict, novel: DataFrame, tally, drift_batch: DataFrame
+    ) -> tuple[dict, bool]:
+        """The steady-state admit's commit step: measure ``drift_batch``
+        against the stored histogram and apply the drift policy (both
+        BEFORE any state change — a refusal rolls back nothing, VERDICT
+        r11 #3), fence, then append ``novel`` to the data of record
+        while ``tally()`` (a read-only aggregate on checkpointed frames
+        returning {verdict: n}) runs alongside, and record the
+        admission snapshot AFTER the append commits (the manifest
+        attributes exactly this admit's files; a crash before it leaves
+        them for the next recorded admission). The fencing check sits
+        at the point of no return: a writer fenced out by a TTL
+        takeover dies there, loudly, with zero state touched (VERDICT
+        r11 #5). Every index-side write comes after this returns — the
+        append-then-extend crash order. Returns (verdict counts,
+        drift-policy hit); drift stats and ``snapshot`` go into
+        ``stats``."""
+        from . import incremental
+
+        hit = False
+        if self.drift_monitor:
+            stats.update(self._drift(self._hist_or_heal(), drift_batch))
+            hit = _apply_drift_policy(
+                stats, self.drift_warn, self.drift_refuse,
+                f"{type(self).__name__}.admit",
+            )
+        incremental.verify_lease(*self._fence())
+        counts, _ = incremental._concurrently(
+            tally,
+            lambda: novel.write.mode("append").parquet(self._data_dir),
+        )
+        stats["snapshot"] = incremental.record_snapshot(
+            self._data_dir, n=counts.get("novel", 0)
+        )
+        return counts, hit
+
+    def _record_layers(self, gen: int, reason: str | None = None) -> None:
+        """Generation-pin every table layer this writer maintains
+        (``on(self)``) and that exists — one manifest line per layer,
+        aligned with the data of record's generation ``gen``. ``reason``
+        is stamped on collapse tombstones after a rebuild (without it a
+        rebuild's cleared manifest reads as late alignment). Driver-side
+        manifest writes only: zero Spark jobs.
+
+        Each admit and each rebuild calls this ONCE, after its last
+        layer write (and before any maintenance that collapses
+        manifests). Accepted trade: a crash after a layer write and
+        before this walk leaves EVERY layer of that admit unrecorded;
+        the next admit's `record_aligned_snapshot` collapses them —
+        layer history degrades, correctness never does — while the data
+        of record keeps its line (`record_snapshot` runs right after
+        the append)."""
+        import os
+
+        from . import incremental
+
+        for layer in self._LAYERS:
+            d = f"{self.index_dir}/{layer.path}"
+            if layer.on(self) and os.path.isdir(d):
+                # Looked up per call: profilers wrap the module attribute.
+                incremental.record_aligned_snapshot(
+                    d, gen, extra=self._record_extra(layer), reason=reason
+                )
+
+    def _record_extra(self, layer: Layer) -> dict | None:
+        """Subclass hook: extra fields for ``layer``'s manifest line."""
+        return None
+
+    def _reconcile_locked(self, **build) -> dict:
+        """Rebuild every derived layer from the data of record as
+        currently written (:meth:`_rebuild_layers`; ``build`` reaches
+        it — the text bootstrap hands over its batch's bands), then
+        record them at the data's generation. A rebuild collapses
+        generation history (the overwrites took the manifests with the
+        dirs); numbering stays aligned with the data of record and
+        older as_of pins fail loudly (the VERDICT r13 contract). At a
+        bootstrap every layer is freshly written and exactly one
+        generation behind, so the recording appends and the reason is
+        inert."""
+        from . import incremental
+
+        meta = self._rebuild_layers(**build)
+        self._record_layers(
+            incremental.snapshot_gens(self._data_dir), _REBUILD_REASON
+        )
+        return meta
 
     def reconcile(self) -> dict:
         """Public entry: :meth:`_reconcile_locked` under the
@@ -991,21 +1087,13 @@ class _WriterBase:
     def _write_hist(self, hist: DataFrame, mode: str) -> None:
         hist.write.mode(mode).parquet(self._hist_dir())
 
-    def _rebuild_hist(
-        self, gen: int | None = None, reason: str | None = None
-    ) -> None:
+    def _rebuild_hist(self) -> None:
         """Rewrite the whole layer from the rebuild source — the
-        bootstrap, reconcile and heal path — record generation ``gen``
-        when given, and clear any marker a crashed extend left."""
+        bootstrap, reconcile and heal path — and clear any marker a
+        crashed extend left."""
         import os
 
-        from . import incremental
-
         self._write_hist(self._hist_source(), "overwrite")
-        if gen is not None:
-            incremental.record_aligned_snapshot(
-                self._hist_dir(), gen, reason=reason
-            )
         if os.path.exists(self._hist_marker()):
             os.remove(self._hist_marker())
 
@@ -1032,23 +1120,17 @@ class _WriterBase:
             self._rebuild_hist()
         return self.spark.read.parquet(self._hist_dir())
 
-    def _extend_hist(self, novel: DataFrame, gen: int) -> None:
+    def _extend_hist(self, novel: DataFrame) -> None:
         """Append the admitted batch's histogram segment, bracketed by
         a marker: a crash mid-append leaves the marker, and the next
         reader rebuilds the whole layer from the (already-committed)
         data of record instead of double-counting a half-written
-        segment. Then generation-pin the layer (r14: ``drift_refuse``
-        makes it admission-affecting state; a mid-admit heal rebuild
-        cleared the manifest, so the recording collapses — history,
-        never correctness)."""
+        segment."""
         import os
-
-        from . import incremental
 
         open(self._hist_marker(), "w").close()
         self._write_hist(self._hist_of(novel), "append")
         os.remove(self._hist_marker())
-        incremental.record_aligned_snapshot(self._hist_dir(), gen)
 
     def _drift(self, ref: DataFrame, batch: DataFrame) -> dict:
         """{"drift_kl_fix", "drift_tv_fix"}: the exact fixed-point KL/TV
@@ -1150,13 +1232,15 @@ class CorpusWriter(_WriterBase):
         # vacuum.
         Layer("dropped", ("band_id", "band_key")),
         # Pre-stage digest layers, keyed for the pre-stage anti-joins.
-        Layer("paragraphs", ("h",)),
-        Layer("exact_substr", ("h",)),
-        Layer("drift_ref", ("b",)),
+        Layer("paragraphs", ("h",), on=lambda w: w.config.dedup_paragraphs),
+        Layer(
+            "exact_substr", ("h",), on=lambda w: w.config.dedup_exact_substr
+        ),
+        Layer("drift_ref", ("b",), on=lambda w: w.drift_monitor),
         # BM25 relations, keyed for term pushdown.
-        Layer("bm25/postings", ("term", "doc_id")),
-        Layer("bm25/df", ("term",)),
-        Layer("bm25/doclen", ("doc_id",)),
+        Layer("bm25/postings", ("term", "doc_id"), on=lambda w: w.bm25_index),
+        Layer("bm25/df", ("term",), on=lambda w: w.bm25_index),
+        Layer("bm25/doclen", ("doc_id",), on=lambda w: w.bm25_index),
     )
     # Pre-stage digest layers: name → (config flag, label in errors).
     _PRESTAGE = {
@@ -1471,7 +1555,9 @@ class CorpusWriter(_WriterBase):
                     vbox["err"] = e
 
             t = threading.Thread(
-                target=_run, name="vs-index-verdicts", daemon=True
+                target=incremental._inheriting(_run),
+                name="vs-index-verdicts",
+                daemon=True,
             )
             t.start()
             vbox["thread"] = t
@@ -1601,122 +1687,65 @@ class CorpusWriter(_WriterBase):
                     sverd.filter(F.col("verdict") == "novel").select("doc_id"),
                     "doc_id",
                 ).localCheckpoint(eager=True)
-                if self.drift_monitor:
-                    # Measure BEFORE any state changes: the stored layer
-                    # is the pre-admit corpus (and the heal path's
-                    # corpus read is too — the append below hasn't
-                    # run). The batch side is the SURVIVORS (the
-                    # arriving distribution post-gates, pre-dedup): a
-                    # drift alarm should fire on what arrived, not be
-                    # masked because most of it was deduped away.
-                    stats.update(
-                        self._drift(self._hist_or_heal(), survivors)
-                    )
-                    # Threshold policy BEFORE any state change: a
-                    # refusal here rolls back nothing (VERDICT r11 #3).
-                    _apply_drift_policy(
-                        stats, self.drift_warn, self.drift_refuse,
-                        "CorpusWriter.admit",
-                    )
-                # The verdict-count aggregate is read-only on the
-                # checkpointed frame — overlap it with the corpus
-                # append (which must still commit before any index
-                # write below; the crash-ordering contract is between
-                # the corpus and the index side, not these two).
-                by_verdict: dict[str, int] = {}
-
-                def _counts():
-                    by_verdict.update(
-                        {
-                            r["verdict"]: r["n"]
-                            for r in sverd.groupBy("verdict")
-                            .agg(F.count("*").alias("n"))
-                            .collect()
-                        }
-                    )
-
-                # Fencing check at the point of no return: everything
-                # above is read-only / driver state; the corpus append
-                # is the first irreversible write. A writer fenced out
-                # by a TTL takeover dies HERE, loudly, with zero state
-                # touched (VERDICT r11 #5).
-                incremental.verify_lease(*self._fence())
-                incremental._concurrently(
-                    _counts,
-                    lambda: novel.write.mode("append").parquet(
-                        self.corpus_dir
-                    ),
+                # Drift is measured on the SURVIVORS (the arriving
+                # distribution post-gates, pre-dedup): a drift alarm
+                # should fire on what arrived, not be masked because
+                # most of it was deduped away. The verdict tally is
+                # read-only on the checkpointed frame.
+                by_verdict, _ = self._commit(
+                    stats,
+                    novel,
+                    lambda: {
+                        r["verdict"]: r["n"]
+                        for r in sverd.groupBy("verdict")
+                        .agg(F.count("*").alias("n"))
+                        .collect()
+                    },
+                    survivors,
                 )
                 stats["rejected_exact"] = by_verdict.get("exact_dup", 0)
                 stats["rejected_near"] = by_verdict.get("near_dup", 0)
                 stats["n_admitted"] = by_verdict.get("novel", 0)
-                # Admission snapshot — AFTER the corpus commit (the
-                # manifest attributes exactly this admit's files; a
-                # crash before this line leaves them for the next
-                # recorded admission — snapshots stay consistent).
-                stats["snapshot"] = incremental.record_snapshot(
-                    self.corpus_dir, n=stats["n_admitted"]
-                )
-                if self.config.dedup_paragraphs:
-                    # Append the ADMITTED docs' paragraph digests —
-                    # novel text is already paragraph-unique vs store
-                    # and batch (the pre-stage), so these rows extend
-                    # the layer without duplicates. Deliberately BEFORE
-                    # extend_index: a crash here sits inside the
-                    # documented append-then-extend window (doc index
-                    # stale, reconcile rebuilds everything), whereas
-                    # paragraphs-after-index would open a window the
-                    # meta checks can't see — admitted documents whose
-                    # paragraph digests were never recorded, silently
-                    # re-admitting those paragraphs in later batches.
-                    # Over-recorded paragraphs are impossible in this
-                    # order (the corpus append above already committed
-                    # their text), so the layer is conservative-correct
-                    # at every crash point.
-                    self._write_digests("paragraphs", novel, "append")
-                if self.config.dedup_exact_substr:
-                    # Same ordering invariant as the paragraph layer:
-                    # record the ADMITTED docs' window digests before
-                    # any index-side write, so a crash can only leave
-                    # the layer covering text the corpus holds.
-                    self._write_digests("exact_substr", novel, "append")
-                # Generation-pin the pre-stage layers right after their
-                # appends (r14): a crash between a write and its
-                # recording misaligns the manifest, which the next
-                # admit's record_aligned_snapshot COLLAPSES — history
-                # degrades, correctness never does.
-                self._record_prestage_gens(stats["snapshot"])
+                # Append the ADMITTED docs' pre-stage digests — novel
+                # text is already paragraph-unique vs store and batch
+                # (the pre-stage), so these rows extend the layers
+                # without duplicates. Deliberately BEFORE extend_index:
+                # a crash here sits inside the documented
+                # append-then-extend window (doc index stale, reconcile
+                # rebuilds everything), whereas digests-after-index
+                # would open a window the meta checks can't see —
+                # admitted documents whose digests were never recorded,
+                # silently re-admitting that text in later batches.
+                # Over-recorded digests are impossible in this order
+                # (the corpus append above already committed their
+                # text), so the layers are conservative-correct at
+                # every crash point.
+                for name, (flag, _) in self._PRESTAGE.items():
+                    if getattr(self.config, flag):
+                        self._write_digests(name, novel, "append")
                 incremental.extend_index(
                     novel, self.index_dir, bands=batch_bands
                 )
-                self._record_dedup_gens(stats["snapshot"])
                 if self.bm25_index:
                     # After the dedup-index extend: a crash anywhere in
                     # the index-side window leaves DERIVED layers stale
                     # w.r.t. the committed corpus, and _extend_bm25
                     # self-heals a missing/interrupted layer by
                     # rebuilding from the corpus (the reconcile path).
-                    bm_meta = self._extend_bm25(novel)
-                    # Generation-pin the layer (VERDICT r12 #1): one
-                    # manifest line per relation per admit, aligned
-                    # with the corpus generation; a heal-path rebuild
-                    # collapses history instead (crash degrades layer
-                    # HISTORY, never correctness). Zero Spark jobs.
-                    self._record_bm25_gens(stats["snapshot"], bm_meta)
+                    self._extend_bm25(novel)
                 if self.drift_monitor:
                     # The layer extends with the ADMITTED (novel) docs —
                     # sum-of-segments stays ≡ a recount of the corpus
                     # (pinned). Same derived-layer crash contract as
-                    # bm25: a crash before this line leaves the layer
-                    # stale (healed by reconcile, like every derived
-                    # layer); a crash MID-append leaves the marker and
+                    # bm25; a crash MID-append leaves the marker and
                     # the next reader rebuilds instead of
-                    # double-counting. The extend also generation-pins
-                    # the layer (r14: drift_refuse makes the reference
-                    # histogram ADMISSION-affecting state —
-                    # drift_stats(batch, as_of=g) replays the
-                    # would-it-have-refused measurement of any era).
-                    self._extend_hist(novel, stats["snapshot"])
+                    # double-counting.
+                    self._extend_hist(novel)
+                # One recording walk after the last layer write (see
+                # _record_layers for the crash trade); before the
+                # compaction below, which collapses the manifests it
+                # finds.
+                self._record_layers(stats["snapshot"])
                 if self.auto_compact:
                     drift = incremental.index_drift(self.index_dir)
                     if (
@@ -1743,36 +1772,12 @@ class CorpusWriter(_WriterBase):
                 stats["snapshot"] = incremental.record_snapshot(
                     self.corpus_dir, n=stats["n_admitted"]
                 )
-                # Paragraph layer before the index build, same ordering
-                # invariant as the append path: the layer is never
-                # behind the corpus once meta is readable (a crash
-                # anywhere in this window leaves no meta.json, which
-                # admit detects and routes through reconcile).
-                for name, (flag, _) in self._PRESTAGE.items():
-                    if getattr(self.config, flag):
-                        self._write_digests(name, self.corpus(), "overwrite")
-                self._record_prestage_gens(stats["snapshot"])
-                # cur.bands (when exposed) covers the eligible superset
-                # of the just-written corpus; _write_band_files filters
-                # to the corpus ids, saving the bootstrap re-banding.
-                incremental.write_index(
-                    self.corpus(), self.index_dir, bands=cur.bands
-                )
-                self._record_dedup_gens(stats["snapshot"])
-                if self.bm25_index:
-                    from .queries.retrieval import write_bm25_index
-
-                    bm_meta = write_bm25_index(
-                        self.spark,
-                        self.corpus().select("doc_id", "text"),
-                        self._bm25_dir(),
-                    )
-                    self._record_bm25_gens(stats["snapshot"], bm_meta)
-                if self.drift_monitor:
-                    # Bootstrap segment 0 = the whole just-written
-                    # corpus; no drift stats (there is no pre-admit
-                    # reference to measure against).
-                    self._rebuild_hist(stats["snapshot"])
+                # Every layer from the just-written corpus — the
+                # reconcile body. cur.bands (when exposed) covers the
+                # eligible superset of the corpus; _write_band_files
+                # filters to the corpus ids, saving the re-banding. No
+                # drift stats: there is no pre-admit reference.
+                self._reconcile_locked(bands=cur.bands)
             return stats
         finally:
             if batch_bands is not None and batch_bands is not cur.bands:
@@ -1816,75 +1821,18 @@ class CorpusWriter(_WriterBase):
             self.spark, novel.select("doc_id", "text"), self._bm25_dir()
         )
 
-    def _record_dedup_gens(
-        self, target_gen: int, reason: str | None = None
-    ) -> None:
-        """Per-admit generation recording for the dedup-index relations
-        (digests/bands/dropped) — generation-pinned classifier REPLAY:
-        `incremental.dedup_against_index(..., as_of=g)` re-answers
-        "was this batch novel at admission g" from these manifests.
-        Zero Spark jobs (the `_record_bm25_gens` discipline).
-        ``reason``: stamped on collapse tombstones when the caller just
-        rebuilt the layer (reconcile) — without it a rebuild's cleared
-        manifest is indistinguishable from true late alignment."""
-        import os
+    def _record_extra(self, layer: Layer) -> dict | None:
+        """The ``bm25/postings`` line carries the cumulative (n_docs,
+        t_tokens) from the layer's ``meta.json`` (VERDICT r12 #1), so a
+        pinned read recovers the exact scoring constants of that era.
+        Driver-side file read — zero Spark jobs."""
+        import json
 
-        from . import incremental
-
-        for name in ("digests", "bands", "dropped"):
-            d = f"{self.index_dir}/{name}"
-            if os.path.isdir(d):
-                incremental.record_aligned_snapshot(
-                    d, target_gen, reason=reason
-                )
-
-    def _record_prestage_gens(
-        self, target_gen: int, reason: str | None = None
-    ) -> None:
-        """Per-admit generation recording for the pre-stage digest
-        layers (``paragraphs`` / ``exact_substr``) — VERDICT r13 #1:
-        these were the one stored-state pair the r13 generation pinning
-        missed, so an admission replay on a writer with the pre-stages
-        enabled silently consulted the LATEST layers. With the
-        manifests aligned, :meth:`pre_stage_batch` (and through it the
-        full classifier replay) is bit-equal at every recorded
-        generation. Zero Spark jobs (the `_record_bm25_gens`
-        discipline)."""
-        import os
-
-        from . import incremental
-
-        for name, enabled in (
-            ("paragraphs", self.config.dedup_paragraphs),
-            ("exact_substr", self.config.dedup_exact_substr),
-        ):
-            d = f"{self.index_dir}/{name}"
-            if enabled and os.path.isdir(d):
-                incremental.record_aligned_snapshot(
-                    d, target_gen, reason=reason
-                )
-
-    def _record_bm25_gens(
-        self, target_gen: int, meta: dict, reason: str | None = None
-    ) -> None:
-        """Per-admit generation recording for the BM25 layer relations,
-        aligned with the corpus manifest (VERDICT r12 #1): cumulative
-        (n_docs, t_tokens) ride the ``postings/`` line so a pinned read
-        recovers the exact scoring constants of that era. Driver-side
-        file metadata only — zero Spark jobs."""
-        from . import incremental
-
-        totals = {
-            "n_docs": int(meta["n_docs"]),
-            "t_tokens": int(meta["t_tokens"]),
-        }
-        for name in ("postings", "df", "doclen"):
-            incremental.record_aligned_snapshot(
-                f"{self._bm25_dir()}/{name}",
-                target_gen,
-                extra=totals if name == "postings" else None,
-                reason=reason,
-            )
+        if layer.path != "bm25/postings":
+            return None
+        with open(f"{self._bm25_dir()}/meta.json") as fh:
+            meta = json.load(fh)
+        return {k: int(meta[k]) for k in ("n_docs", "t_tokens")}
 
     def bm25_topk(self, query_terms: list[str], topk: int = 10, **kw) -> DataFrame:
         """Ranked retrieval over the admitted corpus from the stored
@@ -1917,8 +1865,8 @@ class CorpusWriter(_WriterBase):
         writer lifetimes (digests of different parameters never match,
         silently disabling the cross-batch check). ``as_of`` (r14):
         serve the layer exactly as it stood after recorded admission
-        ``as_of`` (generation-pinned, the `_record_prestage_gens`
-        manifests)."""
+        ``as_of`` (generation-pinned: the layer's per-admit manifest
+        lines, `_record_layers`)."""
         import os
 
         from . import incremental
@@ -1940,12 +1888,11 @@ class CorpusWriter(_WriterBase):
             return incremental.snapshot_read(self.spark, d, as_of)
         return self.spark.read.parquet(d)
 
-    def _write_digests(
-        self, name: str, doc: DataFrame, mode: str, distinct: bool = False
-    ) -> None:
-        """Write ``doc``'s digests into pre-stage layer ``name``
-        (``distinct``: de-duplicated first — the window digests
-        already are)."""
+    def _write_digests(self, name: str, doc: DataFrame, mode: str) -> None:
+        """Write ``doc``'s digests into pre-stage layer ``name``. Not
+        de-duplicated: both readers consume the layer as a SET (the
+        paragraph anti-join, the window min-per-``h``), and
+        :meth:`compact` rewrites it distinct."""
         from .queries.dedup import exact_substr_digests, paragraph_digests
 
         doc = doc.select("doc_id", "text")
@@ -1953,8 +1900,6 @@ class CorpusWriter(_WriterBase):
             rows = paragraph_digests(doc, sep=self.config.paragraph_sep)
         else:
             rows = exact_substr_digests(doc, w=self.config.exact_substr_w)
-        if distinct:
-            rows = rows.distinct()
         rows.write.mode(mode).parquet(f"{self.index_dir}/{name}")
 
     def pre_stage_batch(
@@ -2058,49 +2003,40 @@ class CorpusWriter(_WriterBase):
         DSIR_FIX for the float values)."""
         return self._drift_stats(doc, as_of)
 
-    def _reconcile_locked(self) -> dict:
-        """Rebuild the dedup index from the corpus as currently written —
-        the recovery path for a crash inside :meth:`admit`'s
-        append-then-extend window (and for a crash during bootstrap
-        itself, detected and invoked automatically by :meth:`admit`).
-        With ``dedup_paragraphs`` configured, also (re)builds the
-        stored paragraph-digest layer from the corpus text (defensively
-        distinct — the corpus is paragraph-unique by construction, but
-        this is the crash-recovery path); with ``dedup_exact_substr``,
-        the stored window-digest layer likewise (and this is the
-        late-enablement path for a corpus admitted before the flag)."""
+    def _rebuild_layers(self, bands: DataFrame | None = None) -> dict:
+        """Rebuild every derived layer from the corpus as currently
+        written — the :meth:`reconcile` body, which the bootstrap runs
+        too (``bands``: its batch's exposed band rows, a superset of
+        the corpus ids). Reconcile is the recovery path for a crash
+        inside :meth:`admit`'s append-then-extend window (and for a
+        crash during bootstrap itself, detected and invoked
+        automatically by :meth:`admit`), and the late-enablement path
+        for a corpus admitted before a layer's flag. The pre-stage
+        digest layers are written before the dedup index: the layers
+        are never behind the corpus once meta is readable (a crash
+        anywhere in a bootstrap's window leaves no meta.json, which
+        admit detects and routes through reconcile)."""
         from . import incremental
 
-        gen = incremental.snapshot_gens(self.corpus_dir)
-        meta = incremental.write_index(self.corpus(), self.index_dir)
-        self._record_dedup_gens(gen, reason=_REBUILD_REASON)
         for name, (flag, _) in self._PRESTAGE.items():
             # Also the late-enablement path: _stored_digests refuses on
             # a corpus whose digests were never recorded until this runs.
             if getattr(self.config, flag):
-                self._write_digests(
-                    name, self.corpus(), "overwrite", distinct=True
-                )
-        # A rebuild collapses the pre-stage layers' generation history
-        # (the overwrites took the manifests with the dirs); numbering
-        # stays aligned with the corpus, older as_of pins fail loudly
-        # (the bm25 contract below).
-        self._record_prestage_gens(gen, reason=_REBUILD_REASON)
+                self._write_digests(name, self.corpus(), "overwrite")
+        meta = incremental.write_index(
+            self.corpus(), self.index_dir, bands=bands
+        )
         if self.bm25_index:
             from .queries.retrieval import write_bm25_index
 
-            bm_meta = write_bm25_index(
+            write_bm25_index(
                 self.spark,
                 self.corpus().select("doc_id", "text"),
                 self._bm25_dir(),
             )
-            # A rebuild collapses generation history (the manifests
-            # went with the overwritten dirs); numbering stays aligned
-            # with the corpus, older as_of pins fail loudly.
-            self._record_bm25_gens(gen, bm_meta, reason=_REBUILD_REASON)
         if self.drift_monitor:
             # Also the staleness-heal and late-enablement path.
-            self._rebuild_hist(gen, _REBUILD_REASON)
+            self._rebuild_hist()
         return meta
 
     def _compact_locked(self) -> dict:
@@ -2207,9 +2143,17 @@ class EmbeddingWriter(_WriterBase):
         Layer("lsh_signatures", ("bucket", "vec_id"), ("table_id",)),
         Layer("ivf_assignment", ("cell", "vec_id")),
         Layer("bucket_sizes", ("table_id", "bucket")),
-        Layer("pq_codes", ("vec_id",)),
-        Layer("ivfpq_codes", ("cell", "vec_id")),
-        Layer("cell_hist", ("b",)),
+        Layer(
+            "pq_codes",
+            ("vec_id",),
+            on=lambda w: w.pq_layer and not w.pq_residual,
+        ),
+        Layer(
+            "ivfpq_codes",
+            ("cell", "vec_id"),
+            on=lambda w: w.pq_layer and w.pq_residual,
+        ),
+        Layer("cell_hist", ("b",), on=lambda w: w.drift_monitor),
     )
 
     @property
@@ -2462,7 +2406,6 @@ class EmbeddingWriter(_WriterBase):
             _read_ann_meta,
             extend_ann_index,
             lsh_signatures,
-            write_ann_index,
         )
 
         # locked=True: admit entry under the lease (see CorpusWriter).
@@ -2504,27 +2447,9 @@ class EmbeddingWriter(_WriterBase):
             stats["snapshot"] = incremental.record_snapshot(
                 self.store_dir, n=stats["n_admitted"]
             )
-            # n from the stage-count identity — no count job over the
-            # just-written store (CLAUDE.md: footer/known counts, never
-            # a count() job for parameterization).
-            write_ann_index(
-                self.spark,
-                self.store_dir,
-                self.index_dir,
-                emb=self.store(),
-                n=stats["n_admitted"],
-                codebook=self._build_codebook(),
-            )
-            if self.pq_layer:
-                self._rebuild_pq()
-            # Generation-pin the index layers (VERDICT r12 #1) —
-            # aligned with the store manifest, zero Spark jobs.
-            self._record_ann_gens(stats["snapshot"])
-            if self.drift_monitor:
-                # Bootstrap segment 0 = the just-built inverted file's
-                # occupancy; no drift stats (no pre-admit reference).
-                self._ensure_crows(_read_ann_meta(self.index_dir))
-                self._rebuild_hist(stats["snapshot"])
+            # Every layer from the just-written store — the reconcile
+            # body (no drift stats: there is no pre-admit reference).
+            self._reconcile_locked()
             return stats
 
         meta = _read_ann_meta(self.index_dir)
@@ -2599,58 +2524,36 @@ class EmbeddingWriter(_WriterBase):
                 F.col("verdict") == "novel"
             ).select("vec_id")
             novel = batch_emb.join(novel_ids, "vec_id")
-            # The verdict counts and reject count are read-only on the
-            # checkpoints — overlap them WITH the store append (all
-            # three are independent actions; the crash-ordering
-            # contract only requires the append to commit before the
-            # index extend below, and the whole group finishes first).
-            by_verdict: dict[str, int] = {}
 
-            def _counts():
+            def _tally():
                 # ONE grouped action for BOTH count families (VERDICT
                 # r10 #2): the reject count and the verdict counts read
                 # the same two checkpoints — a tagged union collapses
                 # the two jobs the previous round overlapped into one.
+                # (A/B'd vs the r10 two-concurrent-actions shape on
+                # interleaved minima: fused 5.05 s vs unfused 5.52 s.)
                 tagged = surv_verdicts.select(
                     F.col("verdict").alias("k")
                 ).unionByName(
                     rejects.select(F.lit("in_batch_reject").alias("k"))
                 )
-                by_verdict.update(
-                    {
-                        r["k"]: r["n"]
-                        for r in tagged.groupBy("k")
-                        .agg(F.count("*").alias("n"))
-                        .collect()
-                    }
-                )
+                return {
+                    r["k"]: r["n"]
+                    for r in tagged.groupBy("k")
+                    .agg(F.count("*").alias("n"))
+                    .collect()
+                }
 
-            # (A/B'd vs the r10 two-concurrent-actions shape on
-            # interleaved minima: fused 5.05 s vs unfused 5.52 s — kept.)
-            drift_hit = False
-            if self.drift_monitor:
-                # Measure BEFORE any state change (stored layer and the
-                # heal path's inverted-file read are both the pre-admit
-                # corpus). The batch side is the FULL arriving batch —
-                # a drift alarm should fire on what arrived, not be
-                # masked by how much of it was rejected.
-                self._ensure_crows(meta)
-                stats.update(self._drift(self._hist_or_heal(), batch_emb))
-                # Threshold policy BEFORE any state change — a refusal
-                # rolls back nothing (VERDICT r11 #3).
-                drift_hit = _apply_drift_policy(
-                    stats, self.drift_warn, self.drift_refuse,
-                    "EmbeddingWriter.admit",
-                )
-            # Fencing check at the point of no return (the
-            # CorpusWriter rule): the store append is the first
-            # irreversible write of this admit.
-            incremental.verify_lease(*self._fence())
-            incremental._concurrently(
-                _counts,
-                lambda: novel.write.mode("append").parquet(
-                    self.store_dir
-                ),
+            # Driver-side pyarrow sidecar read — a COLD writer pays a
+            # file read here, not a Spark collect job per admit (the
+            # values are bit-identical; parquet float64). The drift
+            # histogram and the extend below both assign against it.
+            self._ensure_crows(meta)
+            # Drift is measured on the FULL arriving batch — a drift
+            # alarm should fire on what arrived, not be masked by how
+            # much of it was rejected.
+            by_verdict, drift_hit = self._commit(
+                stats, novel, _tally, batch_emb
             )
             stats["rejected_in_batch"] = by_verdict.get(
                 "in_batch_reject", 0
@@ -2660,21 +2563,11 @@ class EmbeddingWriter(_WriterBase):
             # Every batch row is either an in-batch reject or a
             # classified survivor — n_input needs no count job here
             # (the bootstrap path counts because geometry needs n).
-            # Admission snapshot — after the store commit (the
-            # CorpusWriter discipline: a crash before this line leaves
-            # the files for the next recorded admission).
-            stats["snapshot"] = incremental.record_snapshot(
-                self.store_dir, n=stats["n_admitted"]
-            )
             stats["n_input"] = (
                 stats["rejected_in_batch"]
                 + stats["rejected_near"]
                 + stats["n_admitted"]
             )
-            # Driver-side pyarrow sidecar read — a COLD writer pays
-            # a file read here, not a Spark collect job per admit
-            # (the values are bit-identical; parquet float64).
-            self._ensure_crows(meta)
             extend_ann_index(
                 self.spark,
                 novel,
@@ -2691,18 +2584,14 @@ class EmbeddingWriter(_WriterBase):
                 # store (which already holds this batch — the append
                 # above committed first).
                 self._extend_pq(novel)
-            # Generation-pin the extended layers (VERDICT r12 #1):
-            # one manifest line per layer per admit, aligned with the
-            # store generation; a heal-path rebuild collapses history
-            # (crash degrades layer HISTORY, never correctness). A
-            # drift reconcile below re-collapses after its rebuild.
-            self._record_ann_gens(stats["snapshot"])
             if self.drift_monitor:
                 # Derived-layer window, marker-bracketed: same crash
-                # contract as the text writer's drift_ref — and the
-                # same generation pin (r14): drift_refuse makes this
-                # layer admission-affecting state.
-                self._extend_hist(novel, stats["snapshot"])
+                # contract as the text writer's drift_ref.
+                self._extend_hist(novel)
+            # One recording walk after the last layer write (see
+            # _record_layers); a drift reconcile below re-collapses
+            # after its rebuild.
+            self._record_layers(stats["snapshot"])
             if drift_hit and self.drift_reconcile:
                 # The retrain trigger (VERDICT r11 #8 stretch): the
                 # batch IS admitted (all layers extended above — the
@@ -2907,29 +2796,6 @@ class EmbeddingWriter(_WriterBase):
             as_of=as_of,
         )
 
-    def _record_ann_gens(
-        self, target_gen: int, reason: str | None = None
-    ) -> None:
-        """Per-admit generation recording for every per-admit-appended
-        index layer this writer maintains, aligned with the store
-        manifest (VERDICT r12 #1). Codebook/books sidecars are whole-
-        rewrite artifacts — constant within a servable generation
-        range (any retrain goes through reconcile, which collapses
-        history) — so they need no manifests. Zero Spark jobs."""
-        import os
-
-        from . import incremental
-
-        names = ["lsh_signatures", "ivf_assignment", "bucket_sizes"]
-        if self.pq_layer:
-            names.append("ivfpq_codes" if self.pq_residual else "pq_codes")
-        for name in names:
-            d = f"{self.index_dir}/{name}"
-            if os.path.isdir(d):
-                incremental.record_aligned_snapshot(
-                    d, target_gen, reason=reason
-                )
-
     def _check_drift(self) -> None:
         """Post-extend codebook-staleness hook: reconcile in-loop when
         configured, warn otherwise. Meta-sidecar read — zero jobs."""
@@ -2953,15 +2819,19 @@ class EmbeddingWriter(_WriterBase):
             stacklevel=3,
         )
 
-    def _reconcile_locked(self) -> dict:
-        """Rebuild the ANN index from the store as currently written —
-        the recovery path for a crash inside :meth:`admit`'s
-        append-then-extend window (and for a crash during bootstrap,
-        detected and invoked automatically by :meth:`admit`). Also the
-        codebook-refresh path once accumulated extensions have drifted
-        the corpus far from the frozen centroids
-        (`similarity.ann_index_drift` past `ANN_DRIFT_FACTOR`; see
-        ``auto_reconcile``)."""
+    def _rebuild_layers(self) -> dict:
+        """Rebuild the ANN index (and every enabled derived layer) from
+        the store as currently written — the :meth:`reconcile` body,
+        which the bootstrap runs too. Reconcile is the recovery path
+        for a crash inside :meth:`admit`'s append-then-extend window
+        (and for a crash during bootstrap, detected and invoked
+        automatically by :meth:`admit`), and the codebook-refresh path
+        once accumulated extensions have drifted the corpus far from
+        the frozen centroids (`similarity.ann_index_drift` past
+        `ANN_DRIFT_FACTOR`; see ``auto_reconcile``). Codebook/books
+        sidecars are whole-rewrite artifacts — constant within a
+        servable generation range, since any retrain comes through
+        here and collapses history — so they carry no manifests."""
         from . import incremental
         from .queries.similarity import write_ann_index
 
@@ -2981,12 +2851,6 @@ class EmbeddingWriter(_WriterBase):
         )
         if self.pq_layer:
             self._rebuild_pq()
-        # A rebuild collapses generation history (the overwrites took
-        # the manifests with the dirs); numbering stays aligned with
-        # the store, older as_of pins fail loudly (VERDICT r13
-        # contract).
-        gen = incremental.snapshot_gens(self.store_dir)
-        self._record_ann_gens(gen, reason=_REBUILD_REASON)
         if self.drift_monitor:
             # A rebuild retrains the codebook — the cell DOMAIN itself
             # changes, so the layer rebuilds wholesale from the fresh
@@ -2994,7 +2858,7 @@ class EmbeddingWriter(_WriterBase):
             # path). History collapses WITH the domain: any servable
             # as_of is always within one codebook's cell domain.
             self._ensure_crows(meta)
-            self._rebuild_hist(gen, _REBUILD_REASON)
+            self._rebuild_hist()
         return meta
 
     def _compact_locked(self) -> dict:

@@ -337,9 +337,13 @@ def _driver_df(
 ) -> dict[str, int] | None:
     """Per-term summed df via a driver-side pyarrow read of the df/
     relation's (generation-selected) files, or None when the relation
-    exceeds DRIVER_DF_MAX_BYTES. Caller has already resolved the same
-    file set through snapshot_read/spark.read, so listing here cannot
-    newly fail."""
+    exceeds DRIVER_DF_MAX_BYTES — or when a file cannot be stat'd or
+    read here (``OSError`` / ``ArrowInvalid``: a file gone between the
+    caller's listing and this read, a filesystem the driver cannot
+    open), so the caller takes the distributed aggregate instead of
+    failing the query. Caller has already resolved the same file set
+    through snapshot_read/spark.read, so listing here cannot newly
+    fail."""
     df_dir = f"{index_dir}/df"
     if as_of is None:
         files = [
@@ -353,21 +357,22 @@ def _driver_df(
         files = snapshot_files(df_dir, as_of)
     if len(files) > DRIVER_DF_MAX_FILES:
         return None
-    total = 0
-    for f in files:
-        total += os.path.getsize(f)
-        if total > DRIVER_DF_MAX_BYTES:
-            return None
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     out: dict[str, int] = {}
     tlist = sorted(set(terms))
-    for f in files:
-        tbl = pq.read_table(
-            f, columns=["term", "df"], filters=[("term", "in", tlist)]
-        )
-        for t, d in zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()):
-            out[t] = out.get(t, 0) + int(d)
+    try:
+        if sum(os.path.getsize(f) for f in files) > DRIVER_DF_MAX_BYTES:
+            return None
+        for f in files:
+            tbl = pq.read_table(
+                f, columns=["term", "df"], filters=[("term", "in", tlist)]
+            )
+            for t, d in zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()):
+                out[t] = out.get(t, 0) + int(d)
+    except (OSError, pa.ArrowInvalid):
+        return None
     return out
 
 
@@ -522,22 +527,35 @@ def extend_bm25_index(
 
     from ..incremental import _concurrently
 
-    meta = _check_bm25_meta(index_dir)
     batch = (
         _postings_frame(new_doc).localCheckpoint(eager=True)
         if postings is None
         else postings
     )
     try:
-        with open(_bm25_marker(index_dir), "w") as fh:
-            fh.write("")
+        # The totals are read and the marker created back to back (no
+        # Spark job between them), so no other extend can commit in
+        # between and leave this one rolling stale totals. The check
+        # and the create are still two steps: the create is exclusive,
+        # so a second extender that passed the check fails HERE,
+        # loudly, before its before/after doclen/ listing diff could
+        # count the first one's files.
+        meta = _check_bm25_meta(index_dir)
+        try:
+            open(_bm25_marker(index_dir), "x").close()
+        except FileExistsError as e:
+            raise ValueError(
+                f"BM25 index at {index_dir} is being extended by another "
+                "writer (extend.inprogress appeared after the meta check)"
+            ) from e
         # Batch totals come from the doclen files THIS extend appends
         # (r18): n = their row count, t = the sum of their dl column —
         # identical by construction to the r17 count_distinct/sum
         # aggregate over the batch (dl IS sum(tf) per doc), read
         # driver-side via pyarrow from batch-bounded rows instead of
-        # one more Spark job per admit. The writer lease makes the
-        # before/after listing diff race-free.
+        # one more Spark job per admit. The exclusive marker (and,
+        # for writers, the lease) makes the before/after listing diff
+        # race-free.
         doclen_dir = f"{index_dir}/doclen"
         before = set(os.listdir(doclen_dir))
         _concurrently(

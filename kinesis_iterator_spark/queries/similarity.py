@@ -1288,9 +1288,12 @@ def extend_ann_index(
     # the bm25 extend-totals pattern) instead of one more Spark
     # groupBy+write job chain per admit. Identical rows by
     # construction: the written files ARE sig_rows. The driver path is
-    # attempted only when the caller declared the batch size (the
-    # writer path, whose ``sig`` is checkpoint-backed and cheap to
-    # re-consume on the rare over-gate fallback); with n_new unknown
+    # attempted whenever the caller declared the batch size. On the
+    # writer path ``sig`` is checkpoint-backed, so the rare over-gate
+    # fallback re-consumes it cheaply; a caller passing ``n_new``
+    # without ``sig`` takes the driver path too, and its fallback
+    # re-runs the LSH kernel over the batch (``sig`` is then the
+    # un-materialized `lsh_signatures` lineage). With n_new unknown
     # the distributed aggregate keeps its place INSIDE the concurrent
     # group — serializing it after the appends would add its full wall
     # time to exactly the large extends where it is longest.

@@ -58,19 +58,57 @@ def test_from_index_equals_scan(spark, sf2, tmp_path_factory):
     assert want and got == want
 
 
+@pytest.mark.parametrize("force", ["gate", "read_error"])
 def test_distributed_df_path_equals_driver(
-    spark, doc, index_dir, monkeypatch
+    spark, doc, index_dir, monkeypatch, force
 ):
     """The size-gated dual path for per-term document frequencies
-    (r18): forcing the DISTRIBUTED groupBy+broadcast branch (gate -1,
-    the DRIVER_CC_MAX_EDGES test discipline) must score bit-equal to
-    the default driver-side pyarrow literal branch."""
+    (r18): forcing the DISTRIBUTED groupBy+broadcast branch must score
+    bit-equal to the default driver-side pyarrow literal branch —
+    forced by the gate (-1, the DRIVER_CC_MAX_EDGES test discipline)
+    or by a df/ file the driver cannot read (pyarrow raising OSError:
+    the driver branch declines instead of failing the query)."""
+    import pyarrow.parquet as pq
+
     from kinesis_iterator_spark.queries import retrieval as R
 
     want = _rows(bm25_scores_from_index(spark, index_dir, TERMS))
-    monkeypatch.setattr(R, "DRIVER_DF_MAX_BYTES", -1)
+    if force == "gate":
+        monkeypatch.setattr(R, "DRIVER_DF_MAX_BYTES", -1)
+    else:
+
+        def unreadable(*a, **k):
+            raise OSError("unreadable df segment")
+
+        monkeypatch.setattr(pq, "read_table", unreadable)
     got = _rows(bm25_scores_from_index(spark, index_dir, TERMS))
     assert want and got == want
+
+
+def test_overlapping_extend_fails_before_counting(
+    spark, doc, tmp_path, monkeypatch
+):
+    """The marker check and the marker create are two steps: a second
+    extender that passed the check while the first one created the
+    marker must fail loudly at its exclusive create — before it
+    appends anything or diffs the doclen/ listing (which would count
+    the other extender's files into its totals)."""
+    from kinesis_iterator_spark.queries import retrieval as R
+
+    idx = str(tmp_path / "bm25")
+    write_bm25_index(spark, doc.filter(F.col("doc_id") % 2 == 0), idx)
+    real = R._check_bm25_meta
+
+    def racing_check(d):
+        meta = real(d)
+        open(f"{d}/extend.inprogress", "w").close()  # the other extender
+        return meta
+
+    monkeypatch.setattr(R, "_check_bm25_meta", racing_check)
+    before = sorted(os.listdir(f"{idx}/doclen"))
+    with pytest.raises(ValueError, match="another writer"):
+        extend_bm25_index(spark, doc.filter(F.col("doc_id") % 2 == 1), idx)
+    assert sorted(os.listdir(f"{idx}/doclen")) == before
 
 
 def test_topk_from_index_equals_scan_order(spark, doc, index_dir):

@@ -591,3 +591,30 @@ def test_concurrently_returns_in_order_and_propagates_first_error():
     with _pt.raises(RuntimeError, match="first failure"):
         _concurrently(boom, slow_ok)
     assert finished.is_set(), "error propagated before siblings finished"
+
+
+def test_concurrently_keeps_the_callers_job_group(spark):
+    """Thunks run on pool threads with the CALLER's Spark local
+    properties: under pinned-thread mode a plain thread starts without
+    them, so a job group (or scheduler pool) set by the caller would
+    not reach the thunks' jobs."""
+    from kinesis_iterator_spark.incremental import _concurrently
+
+    sc = spark.sparkContext
+    sched = sc._jsc.sc().dagScheduler()
+    group = "concurrently-inherits-job-group"
+    df = spark.range(16)
+    sc.setJobGroup(group, "job-group inheritance")
+    try:
+        j0 = sched.nextJobId()
+        _concurrently(df.count, df.count)
+        j1 = sched.nextJobId()
+    finally:
+        for k in (
+            "spark.jobGroup.id",
+            "spark.job.description",
+            "spark.job.interruptOnCancel",
+        ):
+            sc.setLocalProperty(k, None)
+    ids = set(sc.statusTracker().getJobIdsForGroup(group))
+    assert j1 - j0 >= 2 and ids == set(range(j0, j1))

@@ -115,6 +115,50 @@ def test_crash_before_manifest_line_keeps_snapshots_consistent(
     assert _ids(w.store(as_of=2), "vec_id") == _ids(w.store(), "vec_id")
 
 
+def test_one_recording_walk_records_maintained_layers_only(
+    spark, tmp_path, monkeypatch
+):
+    """The layer table drives the recording walk: a writer records only
+    the layers it maintains (the bm25/* relations an earlier
+    ``bm25_index=True`` writer left gain no line under a writer without
+    the flag), and an admit whose walk never ran leaves every layer of
+    it a generation behind. The next admit's walk collapses those, and
+    the data of record keeps every generation."""
+    doc = load_table(spark, SF, "documents").select(
+        "doc_id", "lang", "source", "text"
+    )
+    corpus, index = str(tmp_path / "corpus"), str(tmp_path / "index")
+    s1 = CorpusWriter(spark, corpus, index, bm25_index=True).admit(
+        doc.filter(F.col("doc_id") % 10 == 0)
+    )
+    bm25 = [f"{index}/bm25/{n}" for n in ("postings", "df", "doclen")]
+    assert [incremental.snapshot_gens(d) for d in bm25] == [1, 1, 1]
+    w = CorpusWriter(spark, corpus, index)
+
+    def crash(*a, **k):
+        raise RuntimeError("crash inside the recording walk")
+
+    monkeypatch.setattr(incremental, "record_aligned_snapshot", crash)
+    with pytest.raises(RuntimeError, match="recording walk"):
+        w.admit(doc.filter(F.col("doc_id") % 10 == 1))
+    monkeypatch.undo()
+    s3 = w.admit(doc.filter(F.col("doc_id") % 10 == 2))
+    assert (s1["snapshot"], s3["snapshot"]) == (1, 3)
+    assert [incremental.snapshot_gens(d) for d in bm25] == [1, 1, 1]
+    for name in ("digests", "bands", "dropped"):
+        d = f"{index}/{name}"
+        assert incremental.snapshot_gens(d) == 3
+        assert incremental.snapshot_files(d, 3)
+        with pytest.raises(ValueError, match="collapsed"):
+            incremental.snapshot_files(d, 1)
+    n2 = incremental._read_snapshots(corpus)[1]["n"]
+    n1, n3 = s1["n_admitted"], s3["n_admitted"]
+    assert n1 and n2 and n3
+    assert [w.corpus(as_of=g).count() for g in (1, 2, 3)] == [
+        n1, n1 + n2, n1 + n2 + n3,
+    ]
+
+
 def test_torn_tail_line_is_skipped(spark, tmp_path):
     emb = load_table(spark, SF, "embeddings")
     w = EmbeddingWriter(

@@ -478,7 +478,9 @@ def test_layer_table_covers_every_generation_pinned_layer(
     prune_snapshots(1). A layer added later but left out of the table
     (never pruned, never vacuumed) fails here. Prune is driver-side:
     zero Spark jobs. One admit: the bootstrap records every layer's
-    manifest, and a later admit adds no layer dir."""
+    manifest, and a later admit adds no layer dir. The bootstrap runs
+    the reconcile body and its one recording walk, so every manifest
+    holds exactly the data of record's generations (lockstep)."""
     from kinesis_iterator_spark.pipeline import CurationConfig
 
     if kind == "text":
@@ -499,6 +501,12 @@ def test_layer_table_covers_every_generation_pinned_layer(
             pq_layer=True, pq_residual=True, pq_iters=1, drift_monitor=True,
         )
     w.admit(batch.filter(F.col(key) % 10 == 0))
+    gens = {
+        os.path.relpath(root, w.index_dir): incremental.snapshot_gens(root)
+        for root, _, files in os.walk(w.index_dir)
+        if incremental.SNAPSHOT_NAME in files
+    }
+    assert gens and set(gens.values()) == {w.snapshots()}, gens
     sched = spark.sparkContext._jsc.sc().dagScheduler()
     jobs = sched.nextJobId()
     out = w.prune_snapshots(1)
